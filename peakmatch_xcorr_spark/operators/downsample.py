@@ -20,7 +20,7 @@ partitioning:
 - ``ewma_smooth`` — exponentially-weighted moving average per key.
   The recursion s_t = a*v_t + (1-a)*s_{t-1} carries O(1) state, so it
   streams through ONE mapInPandas over key-sorted partitions carrying
-  only {key: last_s} across Arrow batches (pack_tier pattern) — no
+  only {key: last_s} across Arrow batches (``plans.keyed``) — no
   group materialization, arbitrarily long series.
 - ``counter_increase`` — Prometheus-style increase() over cumulative
   counters with reset detection (delta < 0 → the post-reset value is
@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from peakmatch_xcorr_spark.operators.rollup import epoch_seconds
+from peakmatch_xcorr_spark.plans.keyed import key_runs, keyed_map_in_pandas
 
 
 # ------------------------------------------------------------------ M4
@@ -224,12 +225,7 @@ def ewma_smooth(
                 continue
             key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
             vals = pdf[value_col].astype("float64").to_numpy()
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for arr in key_arrs:
-                change[1:] |= arr[1:] != arr[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.concatenate((starts[1:], [len(pdf)]))
+            starts, ends = key_runs(key_arrs)
             out = np.empty(len(pdf), dtype=np.float64)
             for s, e in zip(starts, ends):
                 key = tuple(arr[s] for arr in key_arrs)
@@ -256,18 +252,10 @@ def ewma_smooth(
             res["ewma"] = out
             yield pd.DataFrame(res)
 
-    # explicit one-partition-per-core exchange: feeds a Python
-    # recursion stage whose per-row cost dwarfs its byte size (see
-    # rollup.pack_tier), so AQE's byte-based coalescing would
-    # serialize it onto one task at small inputs
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    slim = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*keys, *order, value_col)
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, *order)
+    slim = df.filter(F.col(value_col).isNotNull()).select(
+        *keys, *order, value_col
     )
-    return slim.mapInPandas(smooth, schema=schema)
+    return keyed_map_in_pandas(slim, keys, order, smooth, schema)
 
 
 # ------------------------------------------------------------- counters
@@ -557,12 +545,7 @@ def holt_smooth(
                 continue
             key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
             vals = pdf[value_col].astype("float64").to_numpy()
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for arr in key_arrs:
-                change[1:] |= arr[1:] != arr[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.concatenate((starts[1:], [len(pdf)]))
+            starts, ends = key_runs(key_arrs)
             lev = np.empty(len(pdf), dtype=np.float64)
             trd = np.empty(len(pdf), dtype=np.float64)
             for s, e in zip(starts, ends):
@@ -593,18 +576,10 @@ def holt_smooth(
             res["trend"] = trd
             yield pd.DataFrame(res)
 
-    # explicit one-partition-per-core exchange: feeds a Python
-    # recursion stage whose per-row cost dwarfs its byte size (see
-    # rollup.pack_tier), so AQE's byte-based coalescing would
-    # serialize it onto one task at small inputs
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    slim = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*keys, *order, value_col)
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, *order)
+    slim = df.filter(F.col(value_col).isNotNull()).select(
+        *keys, *order, value_col
     )
-    return slim.mapInPandas(smooth, schema=schema)
+    return keyed_map_in_pandas(slim, keys, order, smooth, schema)
 
 
 def holt_winters_smooth(
@@ -670,12 +645,7 @@ def holt_winters_smooth(
                 continue
             key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
             vals = pdf[value_col].astype("float64").to_numpy()
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for arr in key_arrs:
-                change[1:] |= arr[1:] != arr[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.concatenate((starts[1:], [len(pdf)]))
+            starts, ends = key_runs(key_arrs)
             lev = np.empty(len(pdf), dtype=np.float64)
             trd = np.empty(len(pdf), dtype=np.float64)
             sea = np.empty(len(pdf), dtype=np.float64)
@@ -717,18 +687,10 @@ def holt_winters_smooth(
             res["seasonal"] = sea
             yield pd.DataFrame(res)
 
-    # explicit one-partition-per-core exchange: feeds a Python
-    # recursion stage whose per-row cost dwarfs its byte size (see
-    # rollup.pack_tier), so AQE's byte-based coalescing would
-    # serialize it onto one task at small inputs
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    slim = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*keys, *order, value_col)
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, *order)
+    slim = df.filter(F.col(value_col).isNotNull()).select(
+        *keys, *order, value_col
     )
-    return slim.mapInPandas(smooth, schema=schema)
+    return keyed_map_in_pandas(slim, keys, order, smooth, schema)
 
 
 def holt_winters_forecast(
@@ -790,12 +752,7 @@ def holt_winters_forecast(
             key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
             vals = pdf[value_col].astype("float64").to_numpy()
             tss = pdf[ts_col].to_numpy()
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for arr in key_arrs:
-                change[1:] |= arr[1:] != arr[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.concatenate((starts[1:], [len(pdf)]))
+            starts, ends = key_runs(key_arrs)
             for s0, e0 in zip(starts, ends):
                 key = tuple(arr[s0] for arr in key_arrs)
                 prev = state.get(key)
@@ -846,18 +803,10 @@ def holt_winters_forecast(
         res["forecast"] = f_out
         yield pd.DataFrame(res)
 
-    # explicit one-partition-per-core exchange: feeds a Python
-    # recursion stage whose per-row cost dwarfs its byte size (see
-    # rollup.pack_tier), so AQE's byte-based coalescing would
-    # serialize it onto one task at small inputs
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    slim = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*keys, *order, value_col)
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, *order)
+    slim = df.filter(F.col(value_col).isNotNull()).select(
+        *keys, *order, value_col
     )
-    return slim.mapInPandas(run, schema=schema)
+    return keyed_map_in_pandas(slim, keys, order, run, schema)
 
 
 def asap_pick_window(

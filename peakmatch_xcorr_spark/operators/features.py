@@ -27,6 +27,11 @@ from peakmatch_xcorr_spark.operators.rollup import (
     bucket_seconds,
     epoch_seconds,
 )
+from peakmatch_xcorr_spark.plans.keyed import (
+    complete_key_runs,
+    key_runs,
+    keyed_map_in_pandas,
+)
 
 FEATURE_SCHEMA = (
     "conv_id string, series array<double>, max_peaks array<int>, "
@@ -40,12 +45,13 @@ FFT_SCHEMA = (
 )
 
 
-def _slim_buckets(
-    transcripts: DataFrame, step: int, conv_col: str, ts_col: str
+def _keyed_buckets(
+    transcripts: DataFrame, step: int, conv_col: str, ts_col: str,
+    fn, schema: str,
 ) -> DataFrame:
-    """(conv, bucket ordinal) slimmed JVM-side, hash-repartitioned by
-    conversation, sorted within partitions — the curve family's ONLY
-    wide stage over the raw turns.
+    """``fn`` over (conv, bucket ordinal) rows slimmed JVM-side and
+    streamed per conversation (``plans.keyed``) — the curve family's
+    ONLY wide stage over the raw turns.
 
     Epoch seconds are derived JVM-SIDE: pandas converts instant
     timestamps to naive session-local datetimes, which goes
@@ -53,46 +59,26 @@ def _slim_buckets(
     documents the same trap for manifest bounds); the floor to a
     grid-aligned bucket ordinal matches F.window's tumbling math
     (epoch modulo, session TZ pinned UTC)."""
-    # explicit partition count: this exchange feeds a Python kernel
-    # stage whose per-ROW cost dwarfs its byte size, so AQE's
-    # byte-based coalescing (keyless repartition is coalescible) is
-    # wrong in both directions — at small inputs it collapses the
-    # featurize to ONE task (measured 1.3 s serial for a curve set
-    # whose bytes fit one advisory partition), and under a cached
-    # parent the plan pins to the raw shuffle-partition count instead.
-    # One partition per core = one wave of Python workers; featurize
-    # cost per conversation is uniform (bounded bincount), so no
-    # skew-smoothing second wave is needed.
-    n_parts = transcripts.sparkSession.sparkContext.defaultParallelism
-    return (
-        transcripts.select(
-            conv_col,
-            F.floor(epoch_seconds(ts_col) / F.lit(step))
-            .cast("long").alias("b"),
-        )
-        .repartition(n_parts, conv_col)
-        .sortWithinPartitions(conv_col, "b")
+    slim = transcripts.select(
+        conv_col,
+        F.floor(epoch_seconds(ts_col) / F.lit(step)).cast("long").alias("b"),
     )
+    return keyed_map_in_pandas(slim, [conv_col], ["b"], fn, schema)
 
 
 def _curve_groups(batches, conv_col: str, curve_len: int):
-    """Yield (conv_ids, curves 2-D float64 ndarray) per run of COMPLETE
-    conversations from conv-sorted (conv, b) Arrow batches, carrying a
-    possibly-split trailing conversation across chunk boundaries (the
-    rollup.pack_tier pattern).  Both the per-bucket counting and the
-    curve scatter are one vectorized bincount over run-relative flat
-    indices — no per-conversation Python loop."""
+    """Yield (conv_ids, curves 2-D float64 ndarray) per chunk of
+    COMPLETE conversations from conv-sorted (conv, b) Arrow batches.
+    Both the per-bucket counting and the curve scatter are one
+    vectorized bincount over run-relative flat indices — no
+    per-conversation Python loop."""
     import numpy as np
-    import pandas as pd
 
-    def emit(pdf):
+    for pdf in complete_key_runs(batches, [conv_col]):
         convs = pdf[conv_col].to_numpy()
         b = pdf["b"].to_numpy()
-        change = np.zeros(len(pdf), dtype=bool)
-        change[0] = True
-        change[1:] = convs[1:] != convs[:-1]
-        starts = np.nonzero(change)[0]
-        run_of_row = np.cumsum(change) - 1
+        starts, ends = key_runs([convs])
+        run_of_row = np.repeat(np.arange(len(starts)), ends - starts)
         # bucket index relative to the conversation's first (minimum,
         # since sorted) bucket; truncate to curve_len as the reference
         # does.  idx < 0 can only come from a non-monotonic epoch
@@ -104,26 +90,7 @@ def _curve_groups(batches, conv_col: str, curve_len: int):
         counts = np.bincount(
             flat, minlength=len(starts) * curve_len
         ).astype(np.float64)
-        return convs[starts], counts.reshape(len(starts), curve_len)
-
-    carry = None
-    for pdf in batches:
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if len(pdf) == 0:
-            carry = None
-            continue
-        arr = pdf[conv_col].to_numpy()
-        last = arr == arr[-1]
-        # all rows belong to the trailing key: carry the whole chunk
-        # (stated explicitly — the argmin-of-all-True-returns-0 idiom
-        # this replaces was correct but fragile under edit)
-        split = 0 if last.all() else len(pdf) - int(last[::-1].argmin())
-        complete, carry = pdf.iloc[:split], pdf.iloc[split:]
-        if len(complete):
-            yield emit(complete)
-    if carry is not None and len(carry):
-        yield emit(carry)
+        yield convs[starts], counts.reshape(len(starts), curve_len)
 
 
 def activity_curves(
@@ -138,7 +105,7 @@ def activity_curves(
     truncated to ``curve_len`` (reference: fixed expected-file-line-count,
     BasicEvent.java:40-56 — truncate/zero-pad semantics).
 
-    ONE exchange total (``_slim_buckets`` + ``_curve_groups``).  The
+    ONE exchange total (``_keyed_buckets`` + ``_curve_groups``).  The
     previous two-exchange form (tumbling_rollup's groupBy on
     (conv, window) + a repartition(conv) of the rolled rows) shuffled
     the corpus twice for almost no map-side reduction — at ~2 turns
@@ -156,8 +123,9 @@ def activity_curves(
         for convs, curves in _curve_groups(batches, conv_col, curve_len):
             yield pd.DataFrame({conv_col: convs, "curve": list(curves)})
 
-    return _slim_buckets(transcripts, step, conv_col, ts_col).mapInPandas(
-        assemble, schema=f"{conv_col} string, curve array<double>"
+    return _keyed_buckets(
+        transcripts, step, conv_col, ts_col, assemble,
+        f"{conv_col} string, curve array<double>",
     )
 
 
@@ -257,11 +225,9 @@ def conversation_features(
             if out is not None:
                 yield out
 
-    return (
-        _slim_buckets(transcripts, step, "conv_id", "ts")
-        .mapInPandas(run, schema=FEATURE_SCHEMA)
-        .filter(F.col("ok"))
-    )
+    return _keyed_buckets(
+        transcripts, step, "conv_id", "ts", run, FEATURE_SCHEMA
+    ).filter(F.col("ok"))
 
 
 def fft_precache(features: DataFrame) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peakmatch_xcorr_spark.config import PeakmatchConf
+from peakmatch_xcorr_spark.plans.keyed import complete_key_runs, key_runs
 
 PAIR_SCORE_SCHEMA = "id_a string, id_b string, score double"
 
@@ -785,6 +786,10 @@ def _make_bucket_scorer(
     return compute
 
 
+# the key of one LSH bucket tile: the scorer's exchange and sort key
+_TILE_KEY = ("band", "sig", "ti", "tj")
+
+
 def _make_partition_scorer(
     n_bands: int,
     stride: int,
@@ -795,56 +800,24 @@ def _make_partition_scorer(
     probes: int = 1,
 ):
     """Partition-level wrapper around ``_make_bucket_scorer`` for
-    ``mapInPandas`` over rows sorted by (band, sig) within each
-    partition: iterate bucket groups via change-point splits, carrying
-    a possibly-split trailing group across Arrow chunk boundaries
-    (the rollup.pack_tier pattern).  applyInPandas pays a Python
-    round-trip + Arrow flush PER GROUP — at ~10^5 small LSH buckets
-    that overhead dominates the actual kernel work — where this path
-    pays per Arrow CHUNK."""
-    import numpy as np
-    import pandas as pd
-
+    ``mapInPandas`` over rows sorted by (band, sig, ti, tj) within each
+    partition: iterate bucket tiles via key-run splits of complete
+    chunks (``plans.keyed``).  applyInPandas pays a Python round-trip
+    + Arrow flush PER GROUP — at ~10^5 small LSH buckets that overhead
+    dominates the actual kernel work — where this path pays per Arrow
+    CHUNK."""
     compute = _make_bucket_scorer(
         n_bands, stride, cand_t, final_t, prune_pair_knee, new_only, probes
     )
 
     def run(batches):
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            band = pdf["band"].to_numpy()
-            sig = pdf["sig"].to_numpy()
-            ti = pdf["ti"].to_numpy()
-            tj = pdf["tj"].to_numpy()
-            change = (
-                (band[1:] != band[:-1])
-                | (sig[1:] != sig[:-1])
-                | (ti[1:] != ti[:-1])
-                | (tj[1:] != tj[:-1])
-            )
-            starts = np.flatnonzero(np.r_[True, change])
-            # the trailing group may continue in the next chunk —
-            # always carry it; flush after the iterator drains
-            for s, e in zip(starts[:-1], starts[1:]):
-                out = compute(
-                    (band[s], sig[s], ti[s], tj[s]), pdf.iloc[s:e]
-                )
+        for pdf in complete_key_runs(batches, _TILE_KEY):
+            cols = [pdf[k].to_numpy() for k in _TILE_KEY]
+            starts, ends = key_runs(cols)
+            for s, e in zip(starts, ends):
+                out = compute(tuple(c[s] for c in cols), pdf.iloc[s:e])
                 if len(out):
                     yield out
-            carry = pdf.iloc[starts[-1]:]
-        if carry is not None and len(carry):
-            first = carry.iloc[0]
-            out = compute(
-                (first["band"], first["sig"], first["ti"], first["tj"]),
-                carry,
-            )
-            if len(out):
-                yield out
 
     return run
 
@@ -869,8 +842,8 @@ def _score_buckets(
         n_bands, stride, cand_t, final_t, prune_pair_knee, new_only, probes
     )
     return (
-        members.repartition("band", "sig", "ti", "tj")
-        .sortWithinPartitions("band", "sig", "ti", "tj")
+        members.repartition(*_TILE_KEY)
+        .sortWithinPartitions(*_TILE_KEY)
         .mapInPandas(
             run, schema="id_a string, id_b string, score double, xcorr double"
         )

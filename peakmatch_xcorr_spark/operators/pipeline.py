@@ -12,14 +12,8 @@ from pyspark.sql import DataFrame
 
 from peakmatch_xcorr_spark.config import EngineConf
 from peakmatch_xcorr_spark.operators.dedup import dedup_transcripts
-from peakmatch_xcorr_spark.operators.features import (
-    conversation_features,
-    fft_precache,
-)
-from peakmatch_xcorr_spark.operators.pairs import (
-    peakmatch_candidates,
-    postprocess_verify,
-)
+from peakmatch_xcorr_spark.operators.features import conversation_features
+from peakmatch_xcorr_spark.operators.pairs import fused_prune_verify
 from peakmatch_xcorr_spark.operators.rollup import rollup_cascade
 
 
@@ -34,15 +28,14 @@ def find_duplicate_conversations(
     transcripts: DataFrame,
     conf: EngineConf,
     n_blocks: int | None = None,
-    fused: bool = True,
 ) -> DataFrame:
     """transcripts → activity curves → featurize → peakmatch prune →
     FFT verify.  Returns matches (id_a, id_b, xcorr > final-threshold).
 
-    ``fused=True`` (default, the scale path) verifies candidates
-    inside the block task with zero candidate shuffle; ``fused=False``
-    runs the reference-shaped two-phase plan through the persisted
-    event_fft table.  Identical results (tested).
+    Candidates are verified inside the block task with zero candidate
+    shuffle; the reference-shaped two-phase plan through a persisted
+    event_fft table (``peakmatch_candidates`` + ``postprocess_verify``)
+    gives identical results (tested).
     """
     # each phase output is materialized — the engine's in-memory
     # analogue of the reference's phase files (xcorr.candidates etc.);
@@ -62,15 +55,9 @@ def find_duplicate_conversations(
     ).cache()
     if n_blocks is None:
         n_blocks = auto_blocks(feats.count())
-    if fused:
-        from peakmatch_xcorr_spark.operators.pairs import fused_prune_verify
-
-        return fused_prune_verify(feats, conf.peakmatch, n_blocks).select(
-            "id_a", "id_b", "xcorr"
-        ).cache()
-    cands = peakmatch_candidates(feats, conf.peakmatch, n_blocks).cache()
-    ffts = fft_precache(feats).cache()
-    return postprocess_verify(cands, ffts, conf.peakmatch).cache()
+    return fused_prune_verify(feats, conf.peakmatch, n_blocks).select(
+        "id_a", "id_b", "xcorr"
+    ).cache()
 
 
 def dedup_then_rollup(

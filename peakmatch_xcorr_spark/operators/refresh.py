@@ -98,6 +98,47 @@ def merge_rollups(existing: DataFrame | None, delta: DataFrame, keys: list[str],
     return out.select(*cols)
 
 
+def _split_tier_files(
+    table: WarehouseTable,
+    affected_vals: list[datetime.datetime],
+    cutoff: datetime.datetime | None,
+) -> tuple[list[str], list[str], list[str]] | None:
+    """File-level copy-on-write pruning: partition the tier's
+    current files into (carried, rewrite, dropped) using manifest
+    bucket_start bounds.  A file is REWRITTEN only when its bucket
+    range contains an affected bucket or straddles the retention
+    cutoff; fully-expired files are DROPPED (metadata-only); the
+    rest are carried verbatim — refresh cost ∝ delta, not tier.
+
+    Returns None when any live file lacks bounds (legacy manifest)
+    — the caller must fall back to a full read + overwrite."""
+    import bisect
+
+    files = table.snapshot(table.current_version()).files
+    carried: list[str] = []
+    rewrite: list[str] = []
+    dropped: list[str] = []
+    for f in files:
+        if f.get("rows", 1) == 0:
+            dropped.append(f["path"])
+            continue
+        b = f.get("bounds", {}).get("bucket_start")
+        mn = _parse_bound_ts(b[0]) if b else None
+        mx = _parse_bound_ts(b[1]) if b else None
+        if mn is None or mx is None:
+            return None
+        if cutoff is not None and mx < cutoff:
+            dropped.append(f["path"])
+            continue
+        i = bisect.bisect_left(affected_vals, mn)
+        touches = i < len(affected_vals) and affected_vals[i] <= mx
+        if touches or (cutoff is not None and mn < cutoff):
+            rewrite.append(f["path"])
+        else:
+            carried.append(f["path"])
+    return carried, rewrite, dropped
+
+
 class ContinuousAggregate:
     """Rollup cascade materialized into warehouse tables with
     snapshot-diff incremental refresh and phase checkpoints."""
@@ -268,47 +309,6 @@ class ContinuousAggregate:
         return spark.read.parquet(*paths).select(
             *self.keys, "bucket_start"
         ).distinct()
-
-    def _split_tier_files(
-        self,
-        table: WarehouseTable,
-        affected_vals: list[datetime.datetime],
-        cutoff: datetime.datetime | None,
-    ) -> tuple[list[str], list[str], list[str]] | None:
-        """File-level copy-on-write pruning: partition the tier's
-        current files into (carried, rewrite, dropped) using manifest
-        bucket_start bounds.  A file is REWRITTEN only when its bucket
-        range contains an affected bucket or straddles the retention
-        cutoff; fully-expired files are DROPPED (metadata-only); the
-        rest are carried verbatim — refresh cost ∝ delta, not tier.
-
-        Returns None when any live file lacks bounds (legacy manifest)
-        — the caller must fall back to a full read + overwrite."""
-        import bisect
-
-        files = table.snapshot(table.current_version()).files
-        carried: list[str] = []
-        rewrite: list[str] = []
-        dropped: list[str] = []
-        for f in files:
-            if f.get("rows", 1) == 0:
-                dropped.append(f["path"])
-                continue
-            b = f.get("bounds", {}).get("bucket_start")
-            mn = _parse_bound_ts(b[0]) if b else None
-            mx = _parse_bound_ts(b[1]) if b else None
-            if mn is None or mx is None:
-                return None
-            if cutoff is not None and mx < cutoff:
-                dropped.append(f["path"])
-                continue
-            i = bisect.bisect_left(affected_vals, mn)
-            touches = i < len(affected_vals) and affected_vals[i] <= mx
-            if touches or (cutoff is not None and mn < cutoff):
-                rewrite.append(f["path"])
-            else:
-                carried.append(f["path"])
-        return carried, rewrite, dropped
 
     # above this many distinct affected buckets, COW bookkeeping (a
     # driver collect + forced broadcast) costs more than it saves — the
@@ -526,7 +526,7 @@ class ContinuousAggregate:
                 ):
                     vals = self._collect_bucket_vals(delta_rolled)
                     if vals is not None:  # else backfill-sized: overwrite
-                        split = self._split_tier_files(t0, vals, cutoff)
+                        split = _split_tier_files(t0, vals, cutoff)
                 if split is not None:
                     carried, rewrite, _ = split
                     merged_rw = merge_rollups(
@@ -654,7 +654,7 @@ class ContinuousAggregate:
                 and cutoff_known
                 and not legacy_schema
             ):
-                split = self._split_tier_files(
+                split = _split_tier_files(
                     tier_table,
                     [] if affected_fine is _EMPTY_DELTA else aff_vals,
                     cutoff,
@@ -864,30 +864,13 @@ def archive_expired(
         metrics["sketch_rows_appended"] = 0  # resume: append already done
 
     # expiry: COW split on manifest bounds (metadata-only drops)
-    files = tier.snapshot(tier.current_version()).files
-    carried, rewrite, dropped = [], [], []
-    legacy = False
-    for f in files:
-        if f.get("rows", 1) == 0:
-            dropped.append(f["path"])
-            continue
-        b = f.get("bounds", {}).get("bucket_start")
-        mn = _parse_bound_ts(b[0]) if b else None
-        mx = _parse_bound_ts(b[1]) if b else None
-        if mn is None or mx is None:
-            legacy = True
-            break
-        if mx < arch_hi:
-            dropped.append(f["path"])
-        elif mn < arch_hi:
-            rewrite.append(f["path"])
-        else:
-            carried.append(f["path"])
-    if legacy:
+    split = _split_tier_files(tier, [], arch_hi)
+    if split is None:  # legacy manifest without bounds
         kept = tier.read(spark).filter(F.col("bucket_start") >= F.lit(arch_hi))
         tier.overwrite(kept, job_id="archive_expire")
         metrics.update(status="expired_full_rewrite")
         return metrics
+    carried, rewrite, dropped = split
     if not dropped and not rewrite:
         metrics.update(status="up-to-date")
         return metrics

@@ -25,6 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from peakmatch_xcorr_spark.kernels import codecs
+from peakmatch_xcorr_spark.plans.keyed import (
+    complete_key_runs,
+    key_runs,
+    keyed_map_in_pandas,
+)
+
 # canonical column aliases shared with the DuckDB oracle SQL.
 # ``vcount`` is the NON-NULL value count: avg must be re-derived as
 # vsum/vcount (null-ignoring, SQL semantics) — turns counts all rows,
@@ -269,23 +276,18 @@ def rollup_cascade(
     ts_col: str = "ts",
     value_col: str | None = "value",
     tiers: tuple[str, ...] = ("1 minute", "1 hour", "1 day"),
-    cache_tiers: bool = False,
 ) -> dict[str, DataFrame]:
     """Full cascade raw -> tiers[0] -> tiers[1] -> ... (each tier from
     the previous one).  Tier widths must be multiples of the previous.
 
-    ``cache_tiers=True`` persists each tier in the CacheManager (the
-    in-memory analogue of the warehouse cascade, where every tier is a
-    materialized table, droppable via clearCache).  The default lazily
-    ``localCheckpoint``s each tier instead: acting on tier k then
+    Each tier is lazily ``localCheckpoint``ed: acting on tier k then
     materializes each finer tier's shuffle exactly ONCE and every
     later action (including the same tier's) reads the blocks — a
     plain count per tier becomes one exchange-free job (measured 1.1 s
     → 0.3 s for the three-tier count sweep at sf0.1), and unlike a
     cached plan a checkpoint-backed frame keeps adaptive execution
     alive for downstream queries.  Blocks live until the session (or
-    ``plans.drop_checkpoint``) releases them — the same lifetime the
-    cached variant had."""
+    ``plans.drop_checkpoint``) releases them."""
     out: dict[str, DataFrame] = {}
     prev = None
     for t in tiers:
@@ -293,7 +295,7 @@ def rollup_cascade(
             cur = tumbling_rollup(df, keys, ts_col, value_col, t)
         else:
             cur = cascade_tier(prev, keys, t, has_values=value_col is not None)
-        cur = cur.cache() if cache_tiers else cur.localCheckpoint(eager=False)
+        cur = cur.localCheckpoint(eager=False)
         out[t] = cur
         prev = cur
     return out
@@ -403,12 +405,53 @@ def retention_expire(
     return tier.filter(F.col(ts_col) >= F.lit(horizon_ts))
 
 
+def _pack_runs(
+    tier: DataFrame, keys: list[str], col: str, dtype: str,
+    ts_encode, col_encode, payload: str, codec: str,
+) -> DataFrame:
+    """Shared encode path of the packed tiers: per key run, the
+    bucket_start column through ``ts_encode`` into ``ts_packed`` and
+    ``col`` (cast to ``dtype``) through ``col_encode`` into
+    ``payload``, as one keyed Python stream (plans/keyed.py)."""
+    key_fields = ", ".join(f"{k} string" for k in keys)
+    schema = (
+        f"{key_fields}, n_buckets long, ts_packed binary, {payload} binary, "
+        "codec string"
+    )
+
+    def pack_stream(batches):
+        import pandas as pd
+
+        for pdf in complete_key_runs(batches, keys):
+            key_arrs = [pdf[k].to_numpy() for k in keys]
+            starts, ends = key_runs(key_arrs)
+            ts_all = (
+                pdf["bucket_start"].astype("datetime64[us]")
+                .astype("int64").to_numpy()
+            )
+            col_all = pdf[col].astype(dtype).to_numpy()
+            row = {k: arr[starts] for k, arr in zip(keys, key_arrs)}
+            row["n_buckets"] = ends - starts
+            row["ts_packed"] = [
+                ts_encode(ts_all[s:e]) for s, e in zip(starts, ends)
+            ]
+            row[payload] = [
+                col_encode(col_all[s:e]) for s, e in zip(starts, ends)
+            ]
+            row["codec"] = codec
+            yield pd.DataFrame(row)
+
+    # prune to the packed columns before the shuffle
+    slim = tier.select(*keys, "bucket_start", col)
+    return keyed_map_in_pandas(slim, keys, ["bucket_start"], pack_stream, schema)
+
+
 def pack_tier(
     tier: DataFrame, keys: list[str], value_col: str = "vavg",
     codec: str = "columnar",
 ) -> DataFrame:
     """Per-key Gorilla/delta-of-delta packed payload columns
-    (ts_packed, val_packed) via one applyInPandas over the key —
+    (ts_packed, val_packed) via one keyed mapInPandas stream —
     vectorized Arrow transfer, numpy bit-packing inside
     (kernels/codecs.py), no per-row Python.
 
@@ -418,91 +461,20 @@ def pack_tier(
     dispatch without out-of-band knowledge.
 
     Physical plan: repartition on the keys + sortWithinPartitions +
-    ONE mapInPandas — NOT groupBy().applyInPandas.  applyInPandas pays
-    a per-group UDF eval + Arrow flush, which dominates wall time when
-    groups are small and numerous (measured 3.5 s for 1,500 groups vs
-    ~0.4 s of actual encode); streaming whole Arrow batches and
-    splitting on key change-points keeps the shuffle identical and
-    removes the per-group overhead."""
-    key_fields = ", ".join(f"{k} string" for k in keys)
-    schema = (
-        f"{key_fields}, n_buckets long, ts_packed binary, val_packed binary, "
-        "codec string"
+    ONE mapInPandas that splits whole Arrow batches on key
+    change-points (``plans.keyed``) — NOT groupBy().applyInPandas,
+    whose per-group UDF call and Arrow flush dominate when groups are
+    small and numerous."""
+    if codec == "columnar":
+        ts_encode, val_encode = (
+            codecs.dod_encode_columnar, codecs.gorilla_encode_columnar
+        )
+    else:
+        ts_encode, val_encode = codecs.dod_encode, codecs.gorilla_encode
+    return _pack_runs(
+        tier, keys, value_col, "float64", ts_encode, val_encode,
+        "val_packed", codec,
     )
-
-    def pack_stream(batches):
-        import numpy as np
-        import pandas as pd
-
-        from peakmatch_xcorr_spark.kernels import codecs
-
-        if codec == "columnar":
-            dod_encode = codecs.dod_encode_columnar
-            gorilla_encode = codecs.gorilla_encode_columnar
-        else:
-            dod_encode = codecs.dod_encode
-            gorilla_encode = codecs.gorilla_encode
-
-        def encode_chunk(pdf):
-            ts_all = (
-                pdf["bucket_start"].astype("datetime64[us]").astype("int64").to_numpy()
-            )
-            val_all = pdf[value_col].astype("float64").to_numpy()
-            key_arrs = [pdf[k].to_numpy() for k in keys]
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for arr in key_arrs:
-                change[1:] |= arr[1:] != arr[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.concatenate((starts[1:], [len(pdf)]))
-            row = {k: arr[starts] for k, arr in zip(keys, key_arrs)}
-            row["n_buckets"] = ends - starts
-            row["ts_packed"] = [
-                dod_encode(ts_all[s:e]) for s, e in zip(starts, ends)
-            ]
-            row["val_packed"] = [
-                gorilla_encode(val_all[s:e]) for s, e in zip(starts, ends)
-            ]
-            row["codec"] = codec
-            return pd.DataFrame(row)
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                carry = None
-                continue
-            # hold back the last key: it may continue in the next batch
-            last = np.ones(len(pdf), dtype=bool)
-            for k in keys:
-                arr = pdf[k].to_numpy()
-                last &= arr == arr[-1]
-            # rows of the final key form a contiguous sorted suffix
-            # all rows belong to the trailing key: carry the whole
-            # chunk (stated explicitly — the argmin-of-all-True idiom
-            # this replaces was correct but fragile under edit)
-            split = 0 if last.all() else len(pdf) - int(last[::-1].argmin())
-            complete, carry = pdf.iloc[:split], pdf.iloc[split:]
-            if len(complete):
-                yield encode_chunk(complete)
-        if carry is not None and len(carry):
-            yield encode_chunk(carry)
-
-    # prune to the packed columns before the shuffle; co-locate each
-    # key on one partition and sort so groups are contiguous runs.
-    # Explicit one-partition-per-core count: the exchange feeds a
-    # Python encode stage whose per-row cost dwarfs its byte size, so
-    # AQE's byte-based coalescing serializes the whole encode onto one
-    # task at small tier sizes (measured 0.9 s single-task at sf0.1)
-    # while a cached parent would pin it to the raw shuffle count.
-    n_parts = tier.sparkSession.sparkContext.defaultParallelism
-    slim = (
-        tier.select(*keys, "bucket_start", value_col)
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, "bucket_start")
-    )
-    return slim.mapInPandas(pack_stream, schema=schema)
 
 
 def unpack_tier(
@@ -565,76 +537,12 @@ def pack_count_tier(
     for counters.  Gap-heavy tiers win twice: dense-from-sparse zeros
     collapse into 240-wide zero-run words.
 
-    Same physical plan as pack_tier (repartition + sort + ONE
-    mapInPandas with key-run carry across Arrow chunks; see that
-    docstring for why not applyInPandas)."""
-    key_fields = ", ".join(f"{k} string" for k in keys)
-    schema = (
-        f"{key_fields}, n_buckets long, ts_packed binary, "
-        "counts_packed binary, codec string"
+    Same encode path and physical plan as ``pack_tier``; only the
+    column encoders and the payload column differ."""
+    return _pack_runs(
+        tier, keys, count_col, "int64", codecs.dod_encode_columnar,
+        codecs.s8b_encode, "counts_packed", "s8b",
     )
-
-    def pack_stream(batches):
-        import numpy as np
-        import pandas as pd
-
-        from peakmatch_xcorr_spark.kernels import codecs
-
-        def encode_chunk(pdf):
-            ts_all = (
-                pdf["bucket_start"].astype("datetime64[us]")
-                .astype("int64").to_numpy()
-            )
-            c_all = pdf[count_col].astype("int64").to_numpy()
-            key_arrs = [pdf[k].to_numpy() for k in keys]
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for arr in key_arrs:
-                change[1:] |= arr[1:] != arr[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.concatenate((starts[1:], [len(pdf)]))
-            row = {k: arr[starts] for k, arr in zip(keys, key_arrs)}
-            row["n_buckets"] = ends - starts
-            row["ts_packed"] = [
-                codecs.dod_encode_columnar(ts_all[s:e])
-                for s, e in zip(starts, ends)
-            ]
-            row["counts_packed"] = [
-                codecs.s8b_encode(c_all[s:e]) for s, e in zip(starts, ends)
-            ]
-            row["codec"] = "s8b"
-            return pd.DataFrame(row)
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                carry = None
-                continue
-            last = np.ones(len(pdf), dtype=bool)
-            for k in keys:
-                arr = pdf[k].to_numpy()
-                last &= arr == arr[-1]
-            # all rows belong to the trailing key: carry the whole
-            # chunk (stated explicitly — the argmin-of-all-True idiom
-            # this replaces was correct but fragile under edit)
-            split = 0 if last.all() else len(pdf) - int(last[::-1].argmin())
-            complete, carry = pdf.iloc[:split], pdf.iloc[split:]
-            if len(complete):
-                yield encode_chunk(complete)
-        if carry is not None and len(carry):
-            yield encode_chunk(carry)
-
-    # same explicit one-partition-per-core exchange as pack_tier (the
-    # Python encode stage must not be byte-coalesced to one task)
-    n_parts = tier.sparkSession.sparkContext.defaultParallelism
-    slim = (
-        tier.select(*keys, "bucket_start", count_col)
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, "bucket_start")
-    )
-    return slim.mapInPandas(pack_stream, schema=schema)
 
 
 def unpack_count_tier(

@@ -34,21 +34,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucket_counts(
-    df: DataFrame,
-    ts_col: str,
-    group_cols: list[str],
-    bucket: str,
-) -> DataFrame:
-    """Per (group, tumbling bucket) row counts — the shared first
-    reduction for both two-variable aggregates below."""
-    return (
-        df.withColumn("bucket_start", F.window(F.col(ts_col), bucket).start)
-        .groupBy(*group_cols, "bucket_start")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
 def pair_metric_corr(
     df: DataFrame,
     ts_col: str,

@@ -55,7 +55,10 @@ def get_spark(
     return spark
 
 
-_PREWARMED: set[str] = set()
+# application id -> per touch task, the engine modules its worker had
+# imported (a record of what the prewarm did, not of every worker
+# alive later: one forked after the prewarm never ran the imports)
+_PREWARMED: dict[str, list[list[str]]] = {}
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
@@ -74,9 +77,11 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED:
         return
-    _PREWARMED.add(app_id)
+    _PREWARMED[app_id] = []
 
     def touch(batches):
+        import sys
+
         import numpy as np  # noqa: F401  (import cost is the point)
         import pandas as pd
 
@@ -90,8 +95,8 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
         # session build alongside the pool fork it already pays.  Code
         # warm-up only — no input data is touched.  Best-effort: a
         # worker that cannot import the package (e.g. a py-files
-        # deployment that ships operators lazily) keeps the plain
-        # pool warm.
+        # deployment that ships operators lazily, or a module failing
+        # at import) keeps the plain pool warm.
         try:
             import peakmatch_xcorr_spark.kernels.codecs  # noqa: F401
             import peakmatch_xcorr_spark.kernels.xcorr_batch  # noqa: F401
@@ -99,16 +104,22 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
             import peakmatch_xcorr_spark.operators.pairs  # noqa: F401
             import peakmatch_xcorr_spark.operators.sketches  # noqa: F401
             import peakmatch_xcorr_spark.operators.stats  # noqa: F401
-        except ImportError:
+        except Exception:
             pass
 
-        for b in batches:
-            yield pd.DataFrame({"n": [len(b)]})
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"mods": [sorted(
+            m for m in sys.modules if m.startswith("peakmatch_xcorr_spark.")
+        )]})
 
     n = spark.sparkContext.defaultParallelism
     spark.sparkContext.setJobDescription("session prewarm: python worker pool")
     try:
-        spark.range(0, n, 1, n).mapInPandas(touch, "n long").count()
+        rows = spark.range(0, n, 1, n).mapInPandas(
+            touch, "mods array<string>"
+        ).collect()
+        _PREWARMED[app_id] = [list(r.mods) for r in rows]
         # two tiny synthetic jobs warm the shared JVM machinery the
         # first real aggregation/window query otherwise pays for
         # (whole-stage-codegen framework, hash-aggregate and window

@@ -93,13 +93,3 @@ def read_event_dir(
 
     return files.select("path", "content").mapInPandas(parse, schema=FEATURE_SCHEMA)
 
-
-def write_reference_tsv(df: DataFrame, path: str, score_col: str = "score") -> None:
-    """Reference-format parity dump: ``nameA \\t nameB \\t score``
-    (PeakMatchProcessor.java:47-54 / README.md:74)."""
-    (
-        df.select("id_a", "id_b", score_col)
-        .write.mode("overwrite")
-        .option("sep", "\t")
-        .csv(path)
-    )

@@ -325,19 +325,103 @@ def test_counter_and_zscore_are_pure_window_plans(spark, events):
     assert "Window" in pz
 
 
-def test_ewma_is_single_repartition_mapinpandas(spark, events):
-    """EWMA: exactly one exchange (the key repartition), a partition-
-    local sort (never a global one), and the work in one MapInPandas."""
-    from peakmatch_xcorr_spark.operators.downsample import ewma_smooth
+def _keyed_stage(name, events):
+    """(keyed Python stage ``name`` over ``events``, its key columns)."""
+    from peakmatch_xcorr_spark.config import PeakmatchConf
+    from peakmatch_xcorr_spark.operators import downsample, rollup
+    from peakmatch_xcorr_spark.operators.features import conversation_features
 
+    tier = events.select(
+        F.col("user_id").cast("string").alias("user_id"),
+        F.col("ts").alias("bucket_start"),
+        F.col("value").alias("vavg"),
+        F.col("event_id").alias("turns"),
+    )
+    stages = {
+        "conversation_features": lambda: conversation_features(
+            events.select(
+                F.col("user_id").cast("string").alias("conv_id"), "ts"
+            ),
+            PeakmatchConf(),
+        ),
+        "pack_tier": lambda: rollup.pack_tier(tier, ["user_id"]),
+        "pack_count_tier": lambda: rollup.pack_count_tier(tier, ["user_id"]),
+        "ewma_smooth": lambda: downsample.ewma_smooth(
+            events, ["user_id"], "ts", "value", 0.2, "event_id"
+        ),
+        "holt_smooth": lambda: downsample.holt_smooth(
+            events, ["user_id"], "ts", "value", tiebreak="event_id"
+        ),
+        "holt_winters_smooth": lambda: downsample.holt_winters_smooth(
+            events, ["user_id"], "ts", "value", tiebreak="event_id"
+        ),
+        "holt_winters_forecast": lambda: downsample.holt_winters_forecast(
+            events, ["user_id"], "ts", "value", horizon=3,
+            tiebreak="event_id",
+        ),
+    }
+    keys = ["conv_id"] if name == "conversation_features" else ["user_id"]
+    return stages[name](), keys
+
+
+@pytest.mark.parametrize("stage", [
+    "conversation_features", "pack_tier", "pack_count_tier", "ewma_smooth",
+    "holt_smooth", "holt_winters_smooth", "holt_winters_forecast",
+])
+def test_keyed_stage_is_single_repartition_mapinpandas(spark, events, stage):
+    """Every keyed Python stage: exactly one exchange, a hash
+    repartition on the keys at one partition per core (not the
+    session's shuffle-partition count), feeding one MapInPandas through
+    a partition-local sort (never a global one)."""
     import re
 
-    p = plan(ewma_smooth(events, ["user_id"], "ts", "value", 0.2,
-                         "event_id"))
+    df, keys = _keyed_stage(stage, events)
+    p = plan(df)
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
-    assert "MapInPandas" in p
+    assert len(re.findall(r"\(\d+\) MapInPandas", p)) == 1
+    n = spark.sparkContext.defaultParallelism
+    assert n != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    part = re.search(r"hashpartitioning\(([^)]*)\), REPARTITION", p)
+    *cols, width = [c.strip() for c in part.group(1).split(",")]
+    assert [c.split("#")[0] for c in cols] == keys
+    assert int(width) == n
+    sorts = re.findall(r"\(\d+\) Sort\n.*\nArguments: \[.*\], (\w+), ", p)
+    assert sorts == ["false"]  # global=false: partition-local
     read_schema = p.split("ReadSchema:")[1].splitlines()[0]
     assert "props" not in read_schema and "event_type" not in read_schema
+
+
+def test_complete_key_runs_carries_the_trailing_key():
+    """The carry generator over hand-built batches: a key split across
+    batches, a batch holding only one key, an empty batch, and a
+    two-column key.  Every yielded chunk holds complete runs only."""
+    import pandas as pd
+
+    from peakmatch_xcorr_spark.plans.keyed import complete_key_runs, key_runs
+
+    def frame(rows):
+        return pd.DataFrame(rows, columns=["a", "b", "v"])
+
+    batches = [
+        frame([("x", 1, 0), ("x", 1, 1), ("x", 2, 2)]),
+        frame([("x", 2, 3)]),                    # only the carried key
+        frame([]),                               # empty batch
+        frame([("x", 2, 4), ("y", 1, 5), ("y", 1, 6)]),
+        frame([("y", 1, 7), ("y", 2, 8)]),
+    ]
+    chunks = list(complete_key_runs(iter(batches), ["a", "b"]))
+    assert [c["v"].tolist() for c in chunks] == [
+        [0, 1], [2, 3, 4], [5, 6, 7], [8],
+    ]
+    starts, ends = key_runs([chunks[1]["a"].to_numpy(),
+                             chunks[1]["b"].to_numpy()])
+    assert starts.tolist() == [0] and ends.tolist() == [3]
+    # a one-column key merges what the two-column key splits
+    chunks = list(complete_key_runs(iter(batches), ["a"]))
+    assert [c["v"].tolist() for c in chunks] == [
+        [0, 1, 2, 3, 4], [5, 6, 7, 8],
+    ]
+    assert list(complete_key_runs(iter([frame([])]), ["a"])) == []
 
 
 def test_tpch_q6_pure_scan_pushdown_partial_agg(spark):

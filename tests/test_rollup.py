@@ -138,25 +138,37 @@ def test_retention_expire(spark, events):
 
 
 def test_pack_tier_roundtrip(spark, events):
+    """One payload row per key that decodes to the key's tier rows, at
+    the session's Arrow batch size and at 17-row batches, where every
+    key's run straddles batches and the carried trailing key is what
+    keeps each payload whole."""
     from peakmatch_xcorr_spark.kernels.codecs import dod_decode, gorilla_decode
 
     rolled = tumbling_rollup(events, ["user_id"], "ts", "value", "1 hour")
-    packed = pack_tier(
-        rolled.withColumn("user_id", rolled.user_id.cast("string")),
-        ["user_id"],
-        codec="stream",  # exercises the stream decoders below
-    ).toPandas()
-    assert (packed.codec == "stream").all()
     oracle = rolled.toPandas()
     oracle["user_id"] = oracle.user_id.astype(str)
-    for _, row in packed.iterrows():
-        g = oracle[oracle.user_id == row.user_id].sort_values("bucket_start")
-        ts = g.bucket_start.astype("datetime64[us]").astype("int64").to_numpy()
-        np.testing.assert_array_equal(dod_decode(bytes(row.ts_packed)), ts)
-        np.testing.assert_array_equal(
-            gorilla_decode(bytes(row.val_packed)), g.vavg.to_numpy()
-        )
-        assert row.n_buckets == len(g)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    for max_records in (old, "17"):
+        spark.conf.set(conf, max_records)
+        try:
+            packed = pack_tier(
+                rolled.withColumn("user_id", rolled.user_id.cast("string")),
+                ["user_id"],
+                codec="stream",  # exercises the stream decoders below
+            ).toPandas()
+        finally:
+            spark.conf.set(conf, old)
+        assert (packed.codec == "stream").all()
+        assert sorted(packed.user_id) == sorted(oracle.user_id.unique())
+        for _, row in packed.iterrows():
+            g = oracle[oracle.user_id == row.user_id].sort_values("bucket_start")
+            ts = g.bucket_start.astype("datetime64[us]").astype("int64").to_numpy()
+            np.testing.assert_array_equal(dod_decode(bytes(row.ts_packed)), ts)
+            np.testing.assert_array_equal(
+                gorilla_decode(bytes(row.val_packed)), g.vavg.to_numpy()
+            )
+            assert row.n_buckets == len(g)
 
 
 def test_unpack_inverts_pack(spark, events):

@@ -751,7 +751,7 @@ def _hourly_tier(spark, n_days=10, keys=("a", "b", "c")):
     return spark.createDataFrame(pdf)
 
 
-def test_archive_expired_sketches_then_drops(spark, wh):
+def test_archive_expired_sketches_then_drops(spark, wh, monkeypatch):
     import datetime as dt
 
     from peakmatch_xcorr_spark.operators.downsample import m4_downsample
@@ -803,6 +803,29 @@ def test_archive_expired_sketches_then_drops(spark, wh):
     assert m2["status"] == "up-to-date"
     assert m2["sketch_rows_appended"] == 0
     assert sketch.current_version() == sv and tier.current_version() == tv
+
+    # the same expiry over a legacy manifest without bucket bounds:
+    # no copy-on-write split is possible, so the tier is rewritten in
+    # full, to the same rows
+    legacy = WarehouseTable(wh, "tier_1h_legacy")
+    with monkeypatch.context() as mp:
+        mp.setattr(WarehouseTable, "_footer_bounds", staticmethod(lambda md: {}))
+        legacy.overwrite(
+            df.repartitionByRange(8, "bucket_start"), job_id="seed"
+        )
+    m3 = archive_expired(spark, legacy, WarehouseTable(wh, "legacy_sketch"),
+                         ["conv_id"], horizon, pixel_bucket="1 day",
+                         value_col="vavg")
+    assert m3["status"] == "expired_full_rewrite"
+    assert m3["archived_until"] == m["archived_until"]
+    got_legacy = (
+        legacy.read(spark).toPandas()
+        .sort_values(["conv_id", "bucket_start"]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        got_legacy,
+        kept.sort_values(["conv_id", "bucket_start"]).reset_index(drop=True),
+    )
 
 
 def test_archive_expired_resumes_after_crash_between_commits(spark, wh):
@@ -1041,11 +1064,16 @@ def test_remove_orphans_sweeps_uncommitted_writes_only(spark, wh):
 
 
 def test_load_reference_conf_parses_real_reference_file():
-    """The loader must swallow the reference repo's own xcorr.conf
-    byte-for-byte (every key either mapped or a declared extra)."""
+    """The loader must swallow a reference-format xcorr.conf (every key
+    either mapped or a declared extra).  The checked-in fixture carries
+    the keys and values the survey documents for the reference file."""
+    from pathlib import Path
+
     from peakmatch_xcorr_spark.config import load_reference_conf
 
-    mode, conf, extras = load_reference_conf("/root/reference/xcorr.conf")
+    mode, conf, extras = load_reference_conf(
+        str(Path(__file__).parent / "data" / "xcorr.conf")
+    )
     assert mode == "PLOT1D"
     assert conf.peakmatch.expected_len == 4000
     assert conf.peakmatch.candidate_threshold == 0.55
