@@ -4300,8 +4300,8 @@ def _q_quantile_sketch_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 0.999)
     # single-slice literal frame: the default createDataFrame path
     # parallelizes 8 rows into one pickled-RDD slice per core, and
-    # every downstream action then pays one ~0.2 s Python task per
-    # core (measured ~10 core-seconds per count at local[32])
+    # every downstream action then pays one Python task per core, each
+    # with the fixed per-task worker cost (see plans.small_local_df)
     from peakmatch_xcorr_spark.plans import small_local_df
 
     return small_local_df(

@@ -16,6 +16,16 @@ Layout
 
 __version__ = "0.1.0"
 
+import sys as _sys  # noqa: E402
+
+# Inside a PySpark Python worker (the daemon imports pyspark.worker before
+# it forks one) stop each task's importlib.invalidate_caches() from
+# re-reading unchanged zip archives; the driver is left as it is.
+if "pyspark.worker" in _sys.modules:
+    from peakmatch_xcorr_spark import _zipimport
+
+    _zipimport.install()
+
 # numpy-only re-exports (no pyspark import cost at package import time;
 # Spark operators are imported explicitly from .operators / .sources)
 from peakmatch_xcorr_spark.config import DEFAULT_CONF, EngineConf, PeakmatchConf  # noqa: E402,F401

@@ -151,7 +151,8 @@ def _global_scan(agg: DataFrame, bsec: int, scan_partitions: int) -> DataFrame:
         running += tot
     # single-slice literal frame: the default createDataFrame path
     # parallelizes P rows into one pickled-RDD slice PER CORE, and the
-    # broadcast build then runs a ~0.2 s Python task per slice
+    # broadcast build then runs one Python task per slice, each paying
+    # the fixed per-task worker cost (see plans.small_local_df)
     from peakmatch_xcorr_spark.plans import small_local_df
 
     off_df = F.broadcast(

@@ -55,10 +55,13 @@ def get_spark(
     return spark
 
 
-# application id -> per touch task, the engine modules its worker had
-# imported (a record of what the prewarm did, not of every worker
-# alive later: one forked after the prewarm never ran the imports)
-_PREWARMED: dict[str, list[list[str]]] = {}
+# application id -> what the prewarm did: "tasks" holds, per touch task,
+# the engine modules its worker had imported ("mods") and the module that
+# provides that worker's zipimporter.invalidate_caches ("zip_refresh"); a
+# worker forked after the prewarm never ran the imports.  "tmp" is the
+# temp dir of the parquet warm-up (removed before the session is handed
+# out), None when none was made.
+_PREWARMED: dict[str, dict] = {}
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
@@ -77,10 +80,11 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED:
         return
-    _PREWARMED[app_id] = []
+    record = _PREWARMED[app_id] = {"tasks": [], "tmp": None}
 
     def touch(batches):
         import sys
+        import zipimport
 
         import numpy as np  # noqa: F401  (import cost is the point)
         import pandas as pd
@@ -109,17 +113,23 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
 
         for _ in batches:
             pass
-        yield pd.DataFrame({"mods": [sorted(
-            m for m in sys.modules if m.startswith("peakmatch_xcorr_spark.")
-        )]})
+        yield pd.DataFrame({
+            "mods": [sorted(
+                m for m in sys.modules
+                if m.startswith("peakmatch_xcorr_spark.")
+            )],
+            "zip_refresh": [zipimport.zipimporter.invalidate_caches.__module__],
+        })
 
     n = spark.sparkContext.defaultParallelism
     spark.sparkContext.setJobDescription("session prewarm: python worker pool")
     try:
         rows = spark.range(0, n, 1, n).mapInPandas(
-            touch, "mods array<string>"
+            touch, "mods array<string>, zip_refresh string"
         ).collect()
-        _PREWARMED[app_id] = [list(r.mods) for r in rows]
+        record["tasks"] = [
+            {"mods": list(r.mods), "zip_refresh": r.zip_refresh} for r in rows
+        ]
         # two tiny synthetic jobs warm the shared JVM machinery the
         # first real aggregation/window query otherwise pays for
         # (whole-stage-codegen framework, hash-aggregate and window
@@ -151,7 +161,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
 
         tmp = None
         try:
-            tmp = tempfile.mkdtemp(prefix="pxs_prewarm_")
+            tmp = record["tmp"] = tempfile.mkdtemp(prefix="pxs_prewarm_")
             pq = f"{tmp}/warm.parquet"
             spark.range(0, 64, 1, 1).select(
                 (F.col("id") % 7).alias("k"),

@@ -101,23 +101,28 @@ def test_prewarm_imports_engine_modules_on_workers(spark):
     engine's Arrow-stage closures are pickled against (the keyed-stream
     helper among them), so reused workers never pay the import chain
     inside a timed query.  Asserted on the prewarm's own record: a
-    worker forked after the prewarm never ran the imports."""
+    worker forked after the prewarm never ran the imports.  Importing
+    the engine inside a worker also installs the stat-checked
+    zipimporter refresh (CPython < 3.12 only)."""
+    import sys
+
     from peakmatch_xcorr_spark import session as sess
 
-    record = sess._PREWARMED[spark.sparkContext.applicationId]
-    assert len(record) == spark.sparkContext.defaultParallelism
-    for mods in record:
-        assert "peakmatch_xcorr_spark.operators.features" in mods
-        assert "peakmatch_xcorr_spark.plans.keyed" in mods
+    tasks = sess._PREWARMED[spark.sparkContext.applicationId]["tasks"]
+    assert len(tasks) == spark.sparkContext.defaultParallelism
+    for task in tasks:
+        assert "peakmatch_xcorr_spark.operators.features" in task["mods"]
+        assert "peakmatch_xcorr_spark.plans.keyed" in task["mods"]
+        if sys.version_info < (3, 12):
+            assert task["zip_refresh"] == "peakmatch_xcorr_spark._zipimport"
 
 
 def test_prewarm_leaves_no_tempdir(spark):
-    """The synthetic-parquet warm job cleans up its temp dir before
-    the session is handed out."""
-    import glob
-    import tempfile
+    """The synthetic-parquet warm job cleans up its own temp dir before
+    the session is handed out (checked on the path the prewarm recorded,
+    so another process's prewarm running meanwhile cannot fail it)."""
+    from peakmatch_xcorr_spark import session as sess
 
-    leftovers = glob.glob(
-        os.path.join(tempfile.gettempdir(), "pxs_prewarm_*")
-    )
-    assert leftovers == []
+    tmp = sess._PREWARMED[spark.sparkContext.applicationId]["tmp"]
+    assert tmp is not None and os.path.basename(tmp).startswith("pxs_prewarm_")
+    assert not os.path.exists(tmp)

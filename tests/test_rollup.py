@@ -21,12 +21,17 @@ def transcripts(spark):
     res = generate_transcripts(SynthConf(n_convs=12, n_dup_pairs=2))
     sdf = spark.createDataFrame(res.transcripts)
     sdf.cache().count()
-    return sdf
+    yield sdf
+    sdf.unpersist()
 
 
 @pytest.fixture(scope="module")
 def events(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/events.parquet").cache()
+    # unpersisted on teardown: a cached relation left behind replaces the
+    # parquet scan in every later plan over the same file
+    df = spark.read.parquet("/root/testdata/sf0.001/events.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_activity_rollup_equals_pandas_oracle(spark, transcripts):
