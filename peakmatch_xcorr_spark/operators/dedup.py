@@ -43,13 +43,15 @@ def connected_components(
     convergence via a changed-labels count (bounded by ``max_iter``,
     raises if not converged — determinism over silent wrong answers).
 
-    Small graphs (≤ ``driver_max_edges`` symmetrized edges, i.e. what
-    you'd happily broadcast) skip the loop entirely: union-find on the
-    driver in one pass.  Each distributed round costs ~3 scheduled
-    jobs regardless of data size, so a 500-edge match graph otherwise
-    pays seconds of pure latency; the distributed path remains the
-    anchor for graphs that don't fit one machine, and both paths are
-    tested equal.  Set ``driver_max_edges=0`` to force the loop.
+    Small graphs (≤ ``driver_max_edges`` input edges with non-null
+    endpoints, i.e. what you'd happily broadcast) skip the loop
+    entirely: one bounded collect both sizes the graph and feeds
+    union-find on the driver, which needs no symmetrized copy.  Each
+    distributed round costs ~3 scheduled jobs regardless of data size,
+    so a 500-edge match graph otherwise pays seconds of pure latency;
+    the distributed path remains the anchor for graphs that don't fit
+    one machine, and both paths are tested equal.  Set
+    ``driver_max_edges=0`` to force the loop.
     """
     # localCheckpoint (not cache) on every iteration state: iterative
     # DataFrame loops otherwise re-analyze an ever-growing logical plan
@@ -65,21 +67,16 @@ def connected_components(
     # paths agree (null join keys never match in the loop; pd.factorize
     # would encode None as -1 and corrupt the union-find)
     non_null = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    sym = (
-        non_null.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(non_null.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .repartition(loop_parts, "u")
-        .localCheckpoint()
-    )
-    # bounded size probe: limit-then-count reads at most the threshold,
-    # not the whole (possibly billion-edge) list
-    if driver_max_edges and sym.limit(driver_max_edges + 1).count() <= driver_max_edges:
-        try:
-            out = _driver_union_find(sym)
-        finally:
-            drop_checkpoint(sym)
-        return out
+    fwd = non_null.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    both = fwd.union(non_null.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+    if driver_max_edges:
+        # bounded collect: limit reads at most the threshold, not the
+        # whole (possibly billion-edge) list
+        pdf = fwd.limit(driver_max_edges + 1).toPandas()
+        if len(pdf) <= driver_max_edges:
+            # ids keep the union's (widened) type, as on the loop path
+            return _driver_union_find(spark, pdf, both.schema["u"].dataType)
+    sym = both.distinct().repartition(loop_parts, "u").localCheckpoint()
     # init with min(id, min neighbour): star components converge at
     # init, saving one full propagate round (≈3 jobs) on the loop path
     labels = (
@@ -153,25 +150,26 @@ def connected_components(
     return labels
 
 
-def _driver_union_find(sym: DataFrame) -> DataFrame:
-    """Union-find over a small symmetrized edge list, on the driver.
+def _driver_union_find(spark, pdf, id_type) -> DataFrame:
+    """Union-find over a small edge list (pandas ``u``, ``v``), on the
+    driver.
 
     Same contract as the distributed loop: (id, component) where
     component is the MINIMUM original vertex value in the component
     (min w.r.t. the column's own ordering — string ids compare
-    lexicographically, exactly like ``F.min``).  The bounded collect
-    is the same trust level as a broadcast join's build side.
+    lexicographically, exactly like ``F.min``).  Union-find treats
+    every edge as undirected, so the list needs no reversed copies.
+    The bounded collect is the same trust level as a broadcast join's
+    build side.
     """
     import numpy as np
     import pandas as pd
 
-    pdf = sym.toPandas()
-    id_type = sym.schema["u"].dataType
     out_schema = StructType(
         [StructField("id", id_type), StructField("component", id_type)]
     )
     if pdf.empty:
-        return sym.sparkSession.createDataFrame([], out_schema)
+        return spark.createDataFrame([], out_schema)
     codes, uniques = pd.factorize(
         pd.concat([pdf["u"], pdf["v"]], ignore_index=True), sort=False
     )
@@ -194,7 +192,7 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
     roots = np.array([find(i) for i in range(n)])
     lab = pd.DataFrame({"id": uniques, "root": roots})
     lab["component"] = lab.groupby("root")["id"].transform("min")
-    return sym.sparkSession.createDataFrame(lab[["id", "component"]], out_schema)
+    return spark.createDataFrame(lab[["id", "component"]], out_schema)
 
 
 def dedup_keepers(matches: DataFrame) -> DataFrame:

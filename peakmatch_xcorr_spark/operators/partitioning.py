@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peakmatch_xcorr_spark.operators.rollup import AGG_COLS
+from peakmatch_xcorr_spark.operators.rollup import _reaggregate
 
 
 def repartition_by_conv(df: DataFrame, n: int, key: str = "conv_id") -> DataFrame:
@@ -75,18 +75,4 @@ def salted_two_phase_rollup(
         .withColumn("bucket_start", F.col("w.start"))
         .drop("w")
     )
-    merge = [F.sum("turns").alias("turns")]
-    if value_col:
-        merge += [
-            F.sum("vcount").alias("vcount"),
-            F.sum("vsum").alias("vsum"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        ]
-    out = phase1.groupBy(conv_col, "bucket_start").agg(*merge)
-    if value_col:
-        from peakmatch_xcorr_spark.operators.rollup import _derive_vavg
-
-        out = _derive_vavg(out)
-    cols = [c for c in AGG_COLS if value_col or c == "turns"]
-    return out.select(conv_col, "bucket_start", *cols)
+    return _reaggregate(phase1, [conv_col], bool(value_col))

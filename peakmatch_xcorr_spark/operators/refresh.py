@@ -10,8 +10,10 @@ xcorr.saved computes only missing pairs).  Here:
   last processed snapshot and merging decomposable stats
   (count/sum/min/max; avg re-derived) into the existing tier;
 - coarser tiers recompute ONLY the coarse buckets touched by the
-  delta (semi-join on affected buckets; untouched rows carried over
-  with an anti-join);
+  source diff since each tier's OWN recorded source version
+  (semi-join on affected buckets; untouched rows carried over with an
+  anti-join) — the source's append-only snapshot chain is the one
+  record of what a tier has yet to absorb;
 - every tier commit writes a snapshot with metrics, and a job
   checkpoint manifest marks the phase done against the source
   version — a killed job restarted mid-cascade skips committed
@@ -24,28 +26,22 @@ that day's buckets, never rescanning history.
 from __future__ import annotations
 
 import datetime
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from peakmatch_xcorr_spark.operators.rollup import (
-    _derive_vavg,
+    _reaggregate,
     bucket_seconds,
     cascade_tier,
     ensure_vcount,
     tumbling_rollup,
 )
-from peakmatch_xcorr_spark.sources.warehouse import (
-    JobCheckpoint,
-    WarehouseTable,
-    _atomic_write_json,
-)
+from peakmatch_xcorr_spark.sources.warehouse import JobCheckpoint, WarehouseTable
 
 _EPOCH = datetime.datetime(1970, 1, 1)
 
-# sentinel: the delta chain is intact but added no buckets (no-op)
+# sentinel: the source diff is readable but added no files (no-op)
 _EMPTY_DELTA = object()
 
 
@@ -83,19 +79,7 @@ def merge_rollups(existing: DataFrame | None, delta: DataFrame, keys: list[str],
         existing = ensure_vcount(existing)  # pre-vcount tier migration
         delta = ensure_vcount(delta)
     u = existing.select(*cols).unionByName(delta.select(*cols))
-    aggs = [F.sum("turns").alias("turns")]
-    if has_values:
-        aggs += [
-            F.sum("vcount").alias("vcount"),
-            F.sum("vsum").alias("vsum"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        ]
-    out = u.groupBy(*keys, "bucket_start").agg(*aggs)
-    if has_values:
-        # vavg from the NON-NULL count (vsum ignores nulls; turns doesn't)
-        out = _derive_vavg(out)
-    return out.select(*cols)
+    return _reaggregate(u, keys, has_values)
 
 
 def _split_tier_files(
@@ -227,87 +211,27 @@ class ContinuousAggregate:
             return None
         return _floor_bucket(max(vals), self.tiers[0])
 
-    # ---- affected-bucket chain (crash-safe multi-delta refresh) ----
-
-    def _affected_meta_path(self, v: int) -> str:
-        return f"{self.tier_tables[self.tier_names[0]].dir}/affected_v{v}.meta.json"
-
-    def _write_affected_meta(
-        self, src_v: int, prev_v: int | None, empty: bool, full: bool = False
-    ) -> None:
-        _atomic_write_json(
-            self._affected_meta_path(src_v),
-            {"from_version": prev_v, "to_version": src_v, "empty": empty,
-             "full": full},
-        )
-
-    def _gc_affected(self, src_v: int) -> None:
-        """Drop affected-delta files for versions every tier has passed
-        (the chain walk never needs deltas at or below the slowest
-        tier's source_version, which equals src_v once a refresh
-        completes).  Keeps src_v itself for the lost-checkpoint
-        re-apply path."""
-        import re
-        import shutil
-
-        t0dir = self.tier_tables[self.tier_names[0]].dir
-        for name in os.listdir(t0dir):
-            m = re.fullmatch(r"affected_v(\d+)(\.meta\.json)?", name)
-            if not m or int(m.group(1)) >= src_v:
-                continue
-            full_path = os.path.join(t0dir, name)
-            if os.path.isdir(full_path):
-                shutil.rmtree(full_path)
-            else:
-                os.remove(full_path)
-
-    def _affected_union(
-        self, spark: SparkSession, tier_src_v: int | None, src_v: int
+    def _affected_buckets(
+        self, spark: SparkSession, tier_src_v: int | None, src_v: int,
+        bucket: str,
     ):
-        """Union of affected fine buckets for every delta in
-        (tier_src_v, src_v], walking the meta chain backwards.
+        """Distinct (*keys, bucket_start) at ``bucket`` touched by the
+        source rows a tier recorded at ``tier_src_v`` has yet to absorb:
+        the source's own snapshot diff (tier_src_v, src_v], windowed
+        straight to the tier's bucket (tumbling windows nest, so this
+        equals windowing the finest tier's buckets up).
 
-        Returns a DataFrame, ``_EMPTY_DELTA`` when the covered deltas
-        added nothing, or None when the chain is broken / unknown —
-        callers must then fall back to a full cascade recompute."""
-        if tier_src_v is None:
+        Returns ``_EMPTY_DELTA`` when the diff adds no files, or None
+        when no append-only chain of readable manifests reaches back to
+        ``tier_src_v`` — callers must then recompute the tier in full."""
+        if tier_src_v is None or not self.source.incremental_ok(tier_src_v, src_v):
             return None
-        t0dir = self.tier_tables[self.tier_names[0]].dir
-        paths: list[str] = []
-        v = src_v
-        # a tier already at src_v (lost-checkpoint rerun) re-applies the
-        # current delta alone — idempotent by construction
-        target = tier_src_v if tier_src_v != src_v else None
-        while True:
-            mp = self._affected_meta_path(v)
-            if not os.path.exists(mp):
-                return None
-            with open(mp) as f:
-                meta = json.load(f)
-            if meta.get("full"):
-                # a full rebuild has no delta parquet; anything at or
-                # behind it must recompute everything
-                return None
-            if not meta.get("empty"):
-                data_path = f"{t0dir}/affected_v{v}"
-                if not os.path.isdir(data_path):
-                    return None
-                paths.append(data_path)
-            fv = meta.get("from_version")
-            if tier_src_v == src_v or fv == target:
-                break
-            if fv is None or fv < (target or 0):
-                return None  # chain jumps past the tier's version
-            if fv >= v:
-                # non-decreasing link (e.g. a clobbered meta with
-                # from_version == to_version): broken chain — fall back
-                # to a full recompute rather than walking forever
-                return None
-            v = fv
-        if not paths:
+        raw = self.source.read_diff(spark, tier_src_v, src_v)
+        if raw is None:
             return _EMPTY_DELTA
-        return spark.read.parquet(*paths).select(
-            *self.keys, "bucket_start"
+        return raw.select(
+            *self.keys,
+            F.window(self.ts_col, bucket)["start"].alias("bucket_start"),
         ).distinct()
 
     # above this many distinct affected buckets, COW bookkeeping (a
@@ -444,49 +368,14 @@ class ContinuousAggregate:
                 delta_rolled = tumbling_rollup(
                     delta_raw, self.keys, self.ts_col, self.value_col, self.tiers[0]
                 )
-                # cache only when a second consumer exists: the
-                # affected write (multi-tier) and the file-pruning
-                # value collect (COW against an existing tier) — a
-                # single-tier first refresh reaches the merge alone,
-                # where the cache write is pure overhead
-                if len(self.tier_names) > 1 or existing is not None:
+                # cache only when the file-pruning value collect (COW
+                # against an existing tier) reads it besides the merge
+                if existing is not None:
                     delta_rolled = delta_rolled.cache()
             if delta_rolled is None:
                 merged = existing
             else:
                 merged = merge_rollups(existing, delta_rolled, self.keys, has_values)
-            # affected fine buckets drive the coarse-tier semi-joins.
-            # The meta sidecar records WHICH delta (prev_v, src_v] the
-            # file covers, so a coarse tier left >1 delta behind by a
-            # crash can chain-union every delta it missed.
-            # single-tier aggregates have no coarse consumers: the
-            # affected parquet is only ever read by tiers i >= 1 via
-            # _affected_union, so skip its write job (~1.4 s measured
-            # at sf0.1).  If a wider config is ever pointed at the same
-            # root, _affected_union's missing-dir check already falls
-            # back to a full recompute — correct, just not incremental.
-            if (
-                delta_rolled is not None and not full_rebuild
-                and len(self.tier_names) > 1
-            ):
-                affected = delta_rolled.select(*self.keys, "bucket_start").distinct()
-                affected.write.mode("overwrite").parquet(
-                    f"{t0.dir}/affected_v{src_v}"
-                )
-            # No-clobber on crash-resume: if the previous attempt died
-            # AFTER t0.overwrite (which advances last_processed_version
-            # to src_v) but BEFORE mark_done, this rerun sees
-            # prev_v == src_v and an EMPTY diff — rewriting the meta as
-            # {from_version: src_v, empty: true} would destroy the
-            # recorded (true_prev, src_v] delta that coarse tiers still
-            # need, and a from_version == to_version meta self-loops
-            # the chain walk.  The crashed attempt's meta (written
-            # atomically before the tier commit) is the truth — keep it.
-            mp = self._affected_meta_path(src_v)
-            if prev_v != src_v or not os.path.exists(mp):
-                self._write_affected_meta(
-                    src_v, prev_v, empty=delta_rolled is None, full=full_rebuild
-                )
             if merged is None:
                 # no prior tier AND an empty diff: clean no-op phase
                 ckpt.mark_done(tn0, src_v, {"tier_version": None, "noop": True})
@@ -555,17 +444,17 @@ class ContinuousAggregate:
                     "carried_files": snap.metrics.get("carried_files", 0),
                 }
             if delta_rolled is not None:
-                # all three consumers (affected write, value collect,
-                # merge) have run; don't leak cache across refreshes
+                # both consumers (value collect, merge) have run; don't
+                # leak cache across refreshes
                 delta_rolled.unpersist()
             if fail_after_phase == tn0:
                 raise RuntimeError(f"injected failure after phase {tn0}")
 
         # --- coarser tiers: recompute only affected coarse buckets.
-        # Each tier applies the union of EVERY delta between its own
-        # recorded source_version and src_v (a crash between tiers can
-        # leave a coarse tier several deltas behind; applying only the
-        # latest would silently lose the earlier deltas' buckets).
+        # Each tier reads the source diff since its OWN recorded
+        # source_version (a crash between tiers can leave a coarse tier
+        # several source versions behind the finest; the diff over the
+        # whole range covers every version it missed).
         for i in range(1, len(self.tier_names)):
             tn = self.tier_names[i]
             if ckpt.phase_done(tn, src_v):
@@ -584,7 +473,7 @@ class ContinuousAggregate:
                 tier_src_v = tier_table.snapshot(
                     tier_table.current_version()
                 ).metrics.get("source_version")
-            affected_fine = self._affected_union(spark, tier_src_v, src_v)
+            affected = self._affected_buckets(spark, tier_src_v, src_v, bucket)
             existing = (
                 tier_table.read(spark)
                 if tier_table.current_version() is not None
@@ -605,11 +494,8 @@ class ContinuousAggregate:
             affected_coarse = None
             recomputed = None
             aff_vals: list | None = None
-            if affected_fine not in (None, _EMPTY_DELTA) and existing is not None:
-                affected_coarse = affected_fine.select(
-                    *self.keys,
-                    F.window("bucket_start", bucket)["start"].alias("bucket_start"),
-                ).distinct().cache()
+            if affected not in (None, _EMPTY_DELTA) and existing is not None:
+                affected_coarse = affected.cache()
                 # bounded checks BEFORE planning the forced broadcast:
                 # a backfill-sized delta demotes to a full recompute.
                 # BOTH bounds matter — distinct bucket values bound the
@@ -626,7 +512,7 @@ class ContinuousAggregate:
                 if aff_vals is None:
                     affected_coarse.unpersist()
                     affected_coarse = None
-                    affected_fine = None
+                    affected = None
                 else:
                     # semi-join the finer tier down to rows inside
                     # affected coarse buckets (broadcast is safe: the
@@ -650,13 +536,13 @@ class ContinuousAggregate:
             split = None
             if (
                 existing is not None
-                and affected_fine is not None
+                and affected is not None
                 and cutoff_known
                 and not legacy_schema
             ):
                 split = _split_tier_files(
                     tier_table,
-                    [] if affected_fine is _EMPTY_DELTA else aff_vals,
+                    [] if affected is _EMPTY_DELTA else aff_vals,
                     cutoff,
                 )
 
@@ -690,9 +576,9 @@ class ContinuousAggregate:
                     metrics={"source_version": src_v, "tier": tn},
                 )
             else:
-                if affected_fine is _EMPTY_DELTA and existing is not None:
+                if affected is _EMPTY_DELTA and existing is not None:
                     merged = existing
-                elif existing is None or affected_fine is None:
+                elif existing is None or affected is None:
                     merged = cascade_tier(finer, self.keys, bucket, has_values)
                 else:
                     untouched = existing.join(
@@ -715,7 +601,6 @@ class ContinuousAggregate:
             if fail_after_phase == tn:
                 raise RuntimeError(f"injected failure after phase {tn}")
 
-        self._gc_affected(src_v)
         metrics["status"] = "refreshed"
         if full_rebuild:
             metrics["full_rebuild"] = True

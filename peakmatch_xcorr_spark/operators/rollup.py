@@ -22,7 +22,7 @@ Scale notes (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from peakmatch_xcorr_spark.kernels import codecs
@@ -141,20 +141,25 @@ def tumbling_rollup(
     )
 
 
-def cascade_tier(
-    finer: DataFrame, keys: list[str], bucket: str, has_values: bool = True
+def _reaggregate(
+    rolled: DataFrame,
+    keys: list[str],
+    has_values: bool,
+    bucket: str | Column | None = None,
 ) -> DataFrame:
-    """Continuous-aggregate step: compute a coarser tier FROM the finer
-    tier (never from raw).  count-of-counts / sum-of-sums / min-of-mins
-    / max-of-maxes; avg re-derived as vsum/turns-weighted.
+    """The decomposable re-aggregation of rolled stats, per (keys,
+    bucket): sum of turns / vcount / vsum, min of vmin, max of vmax,
+    then vavg re-derived from the NON-NULL count (vsum ignores nulls;
+    turns doesn't).  Returns keys, ``bucket_start`` and ``AGG_COLS``
+    (``turns`` alone without values).
 
-    Exact-parity with recompute-from-raw is tested in
-    tests/test_rollup.py (north rule: rolled-up points match the
-    reference at each retention tier).
-    """
+    ``bucket`` picks the output bucket: None keeps each row's
+    ``bucket_start`` (merging rollups of one tier); a width string
+    re-buckets on a tumbling window (a coarser fixed-width tier); a
+    Column named ``bucket_start`` gives the new bucket start (calendar
+    tiers)."""
     if has_values:
-        finer = ensure_vcount(finer)
-    win = F.window("bucket_start", bucket)
+        rolled = ensure_vcount(rolled)
     aggs = [F.sum("turns").alias("turns")]
     if has_values:
         aggs += [
@@ -163,16 +168,35 @@ def cascade_tier(
             F.min("vmin").alias("vmin"),
             F.max("vmax").alias("vmax"),
         ]
-    out = (
-        finer.groupBy(*keys, win.alias("w"))
-        .agg(*aggs)
-        .withColumn("bucket_start", F.col("w.start"))
-        .drop("w")
-    )
+    if isinstance(bucket, str):
+        out = (
+            rolled.groupBy(*keys, F.window("bucket_start", bucket).alias("w"))
+            .agg(*aggs)
+            .withColumn("bucket_start", F.col("w.start"))
+            .drop("w")
+        )
+    else:
+        out = rolled.groupBy(
+            *keys, "bucket_start" if bucket is None else bucket
+        ).agg(*aggs)
     if has_values:
         out = _derive_vavg(out)
     cols = [a for a in AGG_COLS if has_values or a == "turns"]
     return out.select(*keys, "bucket_start", *cols)
+
+
+def cascade_tier(
+    finer: DataFrame, keys: list[str], bucket: str, has_values: bool = True
+) -> DataFrame:
+    """Continuous-aggregate step: compute a coarser tier FROM the finer
+    tier (never from raw).  count-of-counts / sum-of-sums / min-of-mins
+    / max-of-maxes; avg re-derived as vsum/vcount.
+
+    Exact-parity with recompute-from-raw is tested in
+    tests/test_rollup.py (north rule: rolled-up points match the
+    reference at each retention tier).
+    """
+    return _reaggregate(finer, keys, has_values, bucket)
 
 
 _CALENDAR_UNITS = ("week", "month", "quarter", "year")
@@ -200,26 +224,10 @@ def calendar_tier(
         raise ValueError(
             f"calendar unit must be one of {_CALENDAR_UNITS}, got {unit!r}"
         )
-    if has_values:
-        finer = ensure_vcount(finer)
-    aggs = [F.sum("turns").alias("turns")]
-    if has_values:
-        aggs += [
-            F.sum("vcount").alias("vcount"),
-            F.sum("vsum").alias("vsum"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        ]
-    out = (
-        finer.groupBy(
-            *keys, F.date_trunc(unit, "bucket_start").alias("bucket_start")
-        )
-        .agg(*aggs)
+    return _reaggregate(
+        finer, keys, has_values,
+        F.date_trunc(unit, "bucket_start").alias("bucket_start"),
     )
-    if has_values:
-        out = _derive_vavg(out)
-    cols = [a for a in AGG_COLS if has_values or a == "turns"]
-    return out.select(*keys, "bucket_start", *cols)
 
 
 def sliding_window_agg(

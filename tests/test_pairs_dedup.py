@@ -202,28 +202,39 @@ def test_connected_components_null_endpoints_dropped(spark):
 def test_connected_components_paths_agree_random(spark):
     """Driver union-find fast path ≡ forced distributed min-label loop
     on a seeded random graph (chains, cliques, isolated edges, and
-    numeric ids exercising non-lexicographic min)."""
+    numeric ids exercising non-lexicographic min).  The second input
+    adds self-loops and reversed duplicate edges under a
+    ``driver_max_edges`` that admits every input edge but not the
+    symmetrized list: the driver path takes it unsymmetrized."""
     import numpy as np
 
     rng = np.random.default_rng(42)
     a = rng.integers(0, 400, size=600)
     b = rng.integers(0, 400, size=600)
-    edges = spark.createDataFrame(
-        pd.DataFrame({"id_a": a, "id_b": b})
-    ).filter("id_a != id_b")
-    fast = (
-        connected_components(edges)
-        .toPandas().sort_values("id").reset_index(drop=True)
+    pdf = pd.DataFrame({"id_a": a, "id_b": b})
+    pdf = pdf[pdf.id_a != pdf.id_b]
+    loops = pd.DataFrame({"id_a": a[:20], "id_b": a[:20]})
+    reversed_dups = pdf.iloc[:30].rename(columns={"id_a": "id_b", "id_b": "id_a"})
+    messy = pd.concat([pdf, loops, reversed_dups], ignore_index=True)
+    n_sym = len(
+        set(zip(messy.id_a, messy.id_b)) | set(zip(messy.id_b, messy.id_a))
     )
-    loop = (
-        connected_components(edges, driver_max_edges=0)
-        .toPandas().sort_values("id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(fast, loop, check_dtype=False)
-    # every edge internally consistent: endpoints share a component
-    comp = fast.set_index("id")["component"]
-    for ea, eb in edges.toPandas().itertuples(index=False):
-        assert comp[ea] == comp[eb]
+    assert len(messy) < n_sym
+    for edges_pdf, dme in ((pdf, 1_000_000), (messy, len(messy))):
+        edges = spark.createDataFrame(edges_pdf)
+        fast = (
+            connected_components(edges, driver_max_edges=dme)
+            .toPandas().sort_values("id").reset_index(drop=True)
+        )
+        loop = (
+            connected_components(edges, driver_max_edges=0)
+            .toPandas().sort_values("id").reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(fast, loop, check_dtype=False)
+        # every edge internally consistent: endpoints share a component
+        comp = fast.set_index("id")["component"]
+        for ea, eb in edges_pdf.itertuples(index=False):
+            assert comp[ea] == comp[eb]
 
 
 def test_dedup_preserves_survivor_rows_exactly(spark, tdf, synth):

@@ -1,6 +1,7 @@
-"""Focused tests for the round-6 optimization internals: the
-single-tier affected-write skip, the single-slice literal frames and
-the session prewarm."""
+"""Focused tests for the round-6 optimization internals: a multi-tier
+refresh whose coarse tiers read the source's snapshot diff since their
+own recorded source version, the single-slice literal frames and the
+session prewarm."""
 
 from __future__ import annotations
 
@@ -27,28 +28,7 @@ def events(spark):
     return spark.createDataFrame(pdf)
 
 
-def test_single_tier_refresh_skips_affected_write(spark, events, tmp_path):
-    from peakmatch_xcorr_spark.operators.refresh import ContinuousAggregate
-    from peakmatch_xcorr_spark.sources.warehouse import WarehouseTable
-
-    root = str(tmp_path / "wh1")
-    src = WarehouseTable(root, "ev")
-    src.append(events)
-    ca = ContinuousAggregate(
-        root, src, keys=["user_id"], ts_col="ts", value_col="value",
-        tiers=("1 hour",), tier_names=("1h",), name="solo",
-    )
-    ca.refresh(spark)
-    t0dir = ca.tier_tables["1h"].dir
-    affected = [f for f in os.listdir(t0dir) if f.startswith("affected_v")
-                and not f.endswith(".meta.json")]
-    assert affected == [], "single-tier refresh must not write affected parquet"
-    # the meta sidecar is still written (chain bookkeeping stays intact)
-    metas = [f for f in os.listdir(t0dir) if f.endswith(".meta.json")]
-    assert metas, "affected meta sidecar must still exist"
-
-
-def test_multi_tier_refresh_still_writes_affected(spark, events, tmp_path):
+def test_multi_tier_incremental_refresh_matches_direct_rollup(spark, events, tmp_path):
     from peakmatch_xcorr_spark.operators.refresh import ContinuousAggregate
     from peakmatch_xcorr_spark.sources.warehouse import WarehouseTable
 
@@ -61,14 +41,10 @@ def test_multi_tier_refresh_still_writes_affected(spark, events, tmp_path):
     )
     ca.refresh(spark)
     # a SECOND incremental refresh (existing tier + new delta) is the
-    # path coarse tiers consume the affected file on
+    # path on which the coarse tier reads the source diff
     src.append(events.filter(F.col("user_id") == 0))
     ca.refresh(spark)
-    t0dir = ca.tier_tables["1h"].dir
-    affected = [f for f in os.listdir(t0dir) if f.startswith("affected_v")
-                and not f.endswith(".meta.json")]
-    assert affected, "multi-tier refresh must keep writing affected parquet"
-    # and the merged view equals a direct rollup of everything
+    # the merged view equals a direct rollup of everything
     from peakmatch_xcorr_spark.operators.rollup import tumbling_rollup
 
     got = ca.real_time(spark, "1d").select("user_id", "bucket_start", "turns")

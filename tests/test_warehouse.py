@@ -217,12 +217,24 @@ def test_resume_with_lost_checkpoint_is_idempotent(spark, wh):
         pd.testing.assert_frame_equal(before[tn], after[tn])
 
 
-def test_crash_then_new_source_version_loses_no_deltas(spark, wh):
+def _affected_sidecars(agg) -> list[str]:
+    return [
+        name for t in agg.tier_tables.values()
+        for name in os.listdir(t.dir) if name.startswith("affected_v")
+    ]
+
+
+@pytest.mark.parametrize("lagging_op", ["append", "compact", "expire"])
+def test_crash_then_new_source_version_loses_no_deltas(spark, wh, lagging_op):
     """ADVICE r1 (high): crash after the finest tier commits for source
-    v, then the source is appended to v+1 BEFORE the rerun.  The rerun
-    rolls only diff(v, v+1) into 1m, and the coarse tiers must apply
-    the union of BOTH deltas — applying only affected_v{v+1} silently
-    loses v's delta in coarse buckets untouched by v+1."""
+    v, then the source moves on BEFORE the rerun while the coarse tiers
+    still lag at v-1.  The coarse tiers must absorb every source version
+    since their OWN recorded one — applying only the latest delta
+    silently loses v's rows in coarse buckets the new version leaves
+    untouched.  The new version is an append (incremental), a
+    compaction (non-append chain) or an expiry of the coarse tiers'
+    boundary manifest (no readable chain); the last two demote the
+    coarse tiers to a full recompute."""
     d1, d2, full = _split_df(spark, 1200)
     src = WarehouseTable(wh, "transcripts")
     agg = ContinuousAggregate(wh, src, keys=["conv_id"], ts_col="ts", value_col=None)
@@ -234,17 +246,22 @@ def test_crash_then_new_source_version_loses_no_deltas(spark, wh):
     with pytest.raises(RuntimeError, match="injected failure"):
         agg.refresh(spark, fail_after_phase="1m")  # 1m at v2, coarse at v1
 
-    # third delta lands before the rerun: source v3
-    res2 = generate_transcripts(
-        SynthConf(n_convs=6, n_dup_pairs=0, giant_conv=False, seed=99)
-    )
-    d3 = spark.createDataFrame(res2.transcripts)
-    src.append(d3)
+    all_raw = full
+    if lagging_op == "append":  # third delta lands before the rerun: v3
+        res2 = generate_transcripts(
+            SynthConf(n_convs=6, n_dup_pairs=0, giant_conv=False, seed=99)
+        )
+        d3 = spark.createDataFrame(res2.transcripts)
+        src.append(d3)
+        all_raw = full.unionByName(d3)
+    elif lagging_op == "compact":
+        src.compact(spark)
+    else:
+        src.expire_snapshots(keep_last=1)  # v1's manifest is gone
 
     m = agg.refresh(spark)
     assert m["status"] == "refreshed"
 
-    all_raw = full.unionByName(d3)
     got = _tiers_as_pandas(spark, agg)
     for tn, bucket in zip(("1m", "1h", "1d"), ("1 minute", "1 hour", "1 day")):
         exp = (
@@ -254,6 +271,9 @@ def test_crash_then_new_source_version_loses_no_deltas(spark, wh):
             .reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(got[tn], exp[got[tn].columns], check_dtype=False)
+    # the source's snapshot chain is the only record of what a tier
+    # has yet to absorb: no affected-bucket sidecar in any tier
+    assert _affected_sidecars(agg) == []
 
 
 def test_empty_source_diff_is_clean_noop(spark, wh):
@@ -412,25 +432,6 @@ def test_refresh_migrates_legacy_tier_without_vcount(spark, wh):
     np.testing.assert_allclose(got.vavg.to_numpy(), exp.vavg.to_numpy(), rtol=1e-12)
 
 
-def test_affected_delta_files_are_garbage_collected(spark, wh):
-    """Old affected_v files are dead once every tier passes them; a
-    completed refresh removes all but the current version (finding #7)."""
-    import glob
-    import os
-
-    d1, d2, full = _split_df(spark, 1200)
-    src = WarehouseTable(wh, "transcripts")
-    agg = ContinuousAggregate(wh, src, keys=["conv_id"], ts_col="ts", value_col=None)
-    src.append(d1)
-    agg.refresh(spark)
-    src.append(d2)
-    agg.refresh(spark)
-    t0dir = agg.tier_tables["1m"].dir
-    leftover = [os.path.basename(p) for p in glob.glob(f"{t0dir}/affected_v*")]
-    assert all(name.startswith("affected_v00002") or "v2" in name for name in leftover), leftover
-    assert not any("affected_v1" == n or n.startswith("affected_v1.") for n in leftover), leftover
-
-
 def test_refresh_copy_on_write_carries_untouched_files(spark, wh):
     """File-level COW: a delta touching only recent buckets must CARRY
     the tier files for older time ranges verbatim (manifest record
@@ -520,24 +521,20 @@ def test_cow_retention_drops_expired_files_metadata_only(spark, wh):
     assert t1m.bucket_start.max() == pd.Timestamp("2024-01-01 17:55")
 
 
-def test_crash_between_tier_commit_and_checkpoint_keeps_delta_meta(spark, wh):
+def test_crash_between_tier_commit_and_checkpoint_resumes_exactly(spark, wh):
     """Code-review r3 (top finding): a crash AFTER t0.overwrite (which
     advances last_processed_version to src_v) but BEFORE mark_done
-    makes the rerun see prev_v == src_v with an empty diff.  The rerun
-    must NOT clobber affected_v{src_v}.meta.json with
-    {from_version: src_v, empty: true} — that both loses the recorded
-    delta for coarse tiers AND self-loops _affected_union's chain
-    walk.  Injection point: _maybe_pack raises once (it runs exactly
-    between the tier commit and the checkpoint mark)."""
-    import json as _json
-
+    makes the rerun see prev_v == src_v with an empty diff for the
+    finest tier.  The coarse tiers, still at v1, must absorb the
+    (v1, v2] delta all the same, and the rerun must terminate.
+    Injection point: _maybe_pack raises once (it runs exactly between
+    the tier commit and the checkpoint mark)."""
     d1, d2, full = _split_df(spark, 1200)
     src = WarehouseTable(wh, "transcripts")
     agg = ContinuousAggregate(wh, src, keys=["conv_id"], ts_col="ts", value_col=None)
 
     src.append(d1)
     agg.refresh(spark)  # tiers fully at source v1
-    v1 = src.current_version()
 
     src.append(d2)  # source v2
     real_pack = agg._maybe_pack
@@ -550,18 +547,8 @@ def test_crash_between_tier_commit_and_checkpoint_keeps_delta_meta(spark, wh):
         agg.refresh(spark)
     agg._maybe_pack = real_pack
 
-    v2 = src.current_version()
-    meta_path = agg._affected_meta_path(v2)
-    with open(meta_path) as f:
-        before = _json.load(f)
-    assert before["from_version"] == v1  # written by the crashed attempt
-
-    m = agg.refresh(spark)  # must terminate AND keep the delta meta
+    m = agg.refresh(spark)
     assert m["status"] == "refreshed"
-    with open(meta_path) as f:
-        after = _json.load(f)
-    assert after["from_version"] == v1, "rerun clobbered the delta meta"
-    assert not after.get("empty")
 
     got = _tiers_as_pandas(spark, agg)
     for tn, bucket in zip(("1m", "1h", "1d"), ("1 minute", "1 hour", "1 day")):
