@@ -24,6 +24,15 @@ from pyspark.sql import SparkSession
 T = TypeVar("T")
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM's code generator has compiled since it started:
+    the sample count of Spark's ``CodegenMetrics`` compilation-time
+    histogram, which ``CodeGenerator`` updates only on a miss in its
+    generated-class cache."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(codegen.METRIC_COMPILATION_TIME().getCount())
+
+
 def measure_job(
     spark: SparkSession, action: Callable[[], T], desc: str = "measured"
 ) -> tuple[T, dict[str, Any]]:
@@ -34,9 +43,17 @@ def measure_job(
     Stages reused from a prior exchange (``skipped`` in the UI) hold no
     attempt in the status store and are correctly counted as zero —
     re-reading a reused shuffle IS read traffic though, so reads still
-    accrue to the downstream stage that performed them."""
+    accrue to the downstream stage that performed them.
+
+    ``codegen_compiles`` is the number of classes the code generator
+    compiled while the action ran.  Unlike the stage metrics it is not
+    scoped to the job group: the count is JVM-wide, so a concurrent
+    query in the same JVM adds its compiles too, and on a cluster it
+    covers the driver JVM only (each executor JVM compiles, and
+    caches, on its own)."""
     sc = spark.sparkContext
     group = f"measure-{uuid.uuid4().hex[:12]}"
+    compiles0 = codegen_compiles(spark)
     sc.setJobGroup(group, desc)
     try:
         result = action()
@@ -44,6 +61,7 @@ def measure_job(
         # clear the group so later jobs don't accrue to this measurement
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    compiles = codegen_compiles(spark) - compiles0
     tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
     seen: set[int] = set()
@@ -55,6 +73,7 @@ def measure_job(
         "shuffle_write_records": 0,
         "shuffle_read_records": 0,
         "executor_run_sec": 0.0,
+        "codegen_compiles": compiles,
     }
     top_stage: dict[str, Any] | None = None
     for jid in tracker.getJobIdsForGroup(group):

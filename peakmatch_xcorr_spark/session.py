@@ -45,6 +45,19 @@ def get_spark(
         # noise).  The UI is off anyway; nothing is lost.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-class cache.  The default of 100 entries is a Guava
+        # cache split over 4 LRU segments of 25, smaller than one
+        # repeated pass: a dedup_scan pass needs 91 distinct classes,
+        # an ingest_refresh load and its cycles ~98, so at the default
+        # each steady dedup_scan pass evicted and recompiled 44-48
+        # classes (18 per refresh cycle) and then ran them cold.  The
+        # 162-query self-check sweep needs 2158, the engine-wide
+        # working set; 4096 holds it with room for the segment split
+        # and for paths interleaved in one long-lived session, at
+        # ~65 KB of heap per cached class.  A static conf: it binds
+        # when the JVM's code generator first runs, so a session
+        # built earlier in the same JVM keeps its size.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if extra_conf:
         for k, v in extra_conf.items():

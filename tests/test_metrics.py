@@ -1,6 +1,8 @@
 """measure_job must attribute real shuffle traffic to the measured
 action and nothing to jobs outside the group."""
 
+import uuid
+
 import pyspark.sql.functions as F
 
 from peakmatch_xcorr_spark.metrics import measure_job
@@ -61,3 +63,15 @@ def test_measure_job_restores_job_group(spark):
     measure_job(spark, lambda: spark.range(0, 10).count())
     sc = spark.sparkContext
     assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_measure_job_counts_codegen_compiles(spark):
+    # a literal no earlier query used makes the generated source, and so
+    # the class, new to the JVM; the same action again reuses the class
+    # from Spark's generated-class cache
+    salt = uuid.uuid4().int % 1_000_003
+    df = spark.range(0, 1000).select((F.col("id") * 7919 + salt).alias("v"))
+    _, first = measure_job(spark, df.collect, "never-seen expression")
+    _, again = measure_job(spark, df.collect, "same expression again")
+    assert first["codegen_compiles"] >= 1
+    assert again["codegen_compiles"] == 0

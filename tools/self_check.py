@@ -71,6 +71,7 @@ def run_self_check(
     sf_dir: str, out_path: str, only: list[str] | None = None
 ) -> dict:
     import __spark_entry__ as entrymod
+    from peakmatch_xcorr_spark.metrics import codegen_compiles
     from peakmatch_xcorr_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -88,6 +89,7 @@ def run_self_check(
         queries = {n: queries[n] for n in only}
     results: dict[str, dict] = {}
     t_start = time.time()
+    compiles0 = codegen_compiles(spark)
     for name in sorted(queries):
         row: dict = {
             "rows_match": None, "schema_match": None, "value_match": None,
@@ -133,6 +135,11 @@ def run_self_check(
             if r["mode"] == "rows_only" and r["schema_match"] and not r["err"]
         ),
         "n_errors": sum(1 for r in results.values() if r["err"]),
+        # classes the code generator compiled over the sweep: with no
+        # evictions this is the number of distinct generated classes the
+        # whole registry needs, the engine-wide working set that
+        # spark.sql.codegen.cache.maxEntries (session.get_spark) covers
+        "codegen_compiles": codegen_compiles(spark) - compiles0,
         "elapsed_sec": round(time.time() - t_start, 1),
     }
     report = {"summary": summary, "queries": results}
