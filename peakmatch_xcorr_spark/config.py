@@ -78,12 +78,9 @@ class ClusterConf:
 
 @dataclass(frozen=True)
 class RollupConf:
-    """Engine-only: tumbling rollup cascade + retention tiers."""
+    """Engine-only: tumbling rollup cascade tiers + the activity curve."""
 
     tiers: tuple[str, ...] = ("1 minute", "1 hour", "1 day")
-    tier_names: tuple[str, ...] = ("1m", "1h", "1d")
-    # retention horizon per tier, seconds (None = keep forever)
-    retention_s: tuple[int | None, ...] = (None, None, None)
     # activity-curve bucket used for near-dup xcorr of conversations
     activity_bucket: str = "1 minute"
     activity_curve_len: int = 256  # fixed-length curve for xcorr kernels
@@ -95,10 +92,6 @@ class EngineConf:
     spectral: SpectralConf = field(default_factory=SpectralConf)
     cluster: ClusterConf = field(default_factory=ClusterConf)
     rollup: RollupConf = field(default_factory=RollupConf)
-    # partitioning
-    shuffle_partitions: int = 32
-    pair_block_size: int = 512  # events per block in the blocked self-join
-    salt_buckets: int = 16  # salt fan-out for skewed conv_id
 
 
 DEFAULT_CONF = EngineConf()

@@ -17,11 +17,17 @@ partitioning:
   polyline.  Sequential (each pick depends on the previous), so it
   runs as one applyInPandas per key with a vectorized numpy inner
   loop over the n_out buckets.
-- ``ewma_smooth`` — exponentially-weighted moving average per key.
-  The recursion s_t = a*v_t + (1-a)*s_{t-1} carries O(1) state, so it
-  streams through ONE mapInPandas over key-sorted partitions carrying
-  only {key: last_s} across Arrow batches (``plans.keyed``) — no
-  group materialization, arbitrarily long series.
+- exponential smoothing — ONE recursion, ``exp_smooth_run``: additive
+  Holt-Winters level/trend/seasonal over one key's values from a
+  carried (level, trend, seasonal ring, cursor) state.  beta = gamma
+  = 0 is ``ewma_smooth``, gamma = 0 is ``holt_smooth``, the full
+  recursion is ``holt_winters_smooth`` and ``holt_winters_forecast``
+  extrapolates its final state.  All four run as ONE mapInPandas over
+  key-sorted partitions carrying that O(period) state across Arrow
+  batches (``plans.keyed``) — no group materialization, arbitrarily
+  long series.  The streaming twins (streaming/activity.py
+  ``stateful_ewma`` / ``stateful_holt_winters``) call the same
+  function once per micro-batch with the state in the state store.
 - ``counter_increase`` — Prometheus-style increase() over cumulative
   counters with reset detection (delta < 0 → the post-reset value is
   the contribution).  Pure window + aggregate, whole-stage codegen.
@@ -34,8 +40,9 @@ Scale notes (100 TB / 10^12 turns):
 - m4/counter/zscore are single-exchange plans keyed by (key[, bucket])
   with map-side partial aggregation; skew is bounded by the largest
   single conversation, same envelope as the rollup cascade.
-- lttb/ewma partition by key; per-task memory is one conversation's
-  curve (LTTB) or O(1) (EWMA).  Neither collects to the driver.
+- lttb/smoothing partition by key; per-task memory is one
+  conversation's curve (LTTB) or O(period) per key (smoothing).
+  Neither collects to the driver.
 """
 
 from __future__ import annotations
@@ -44,7 +51,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from peakmatch_xcorr_spark.operators.rollup import epoch_seconds
 from peakmatch_xcorr_spark.plans.keyed import key_runs, keyed_map_in_pandas
 
 
@@ -186,7 +192,170 @@ def lttb_downsample(
     return slim.groupBy(*keys).applyInPandas(pick, schema=schema)
 
 
-# ---------------------------------------------------------------- EWMA
+# --------------------------------------------------- exponential smoothing
+
+def check_smoothing(
+    alpha: float, beta: float = 0.0, gamma: float = 0.0, period: int = 1
+) -> None:
+    """Raise ``ValueError`` unless the parameters are valid for
+    ``exp_smooth_run``; every smoothing operator, batch and streaming,
+    calls this before it plans anything."""
+    if not 0.0 < alpha <= 1.0:
+        raise ValueError("alpha must be in (0, 1]")
+    if not 0.0 <= beta <= 1.0:
+        raise ValueError("beta must be in [0, 1]")
+    if not 0.0 <= gamma <= 1.0:
+        raise ValueError("gamma must be in [0, 1]")
+    if period < 1:
+        raise ValueError("period must be >= 1")
+
+
+def exp_smooth_run(
+    vals: np.ndarray,
+    state: tuple | None,
+    alpha: float,
+    beta: float = 0.0,
+    gamma: float = 0.0,
+    period: int = 1,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, tuple]:
+    """Additive Holt-Winters over one key's values, in order:
+
+        s_prev = s_{t-period}  (0.0 while t <= period: pre-season zeros)
+        l_1 = v_1, b_1 = 0, s_1 = 0
+        l_t = alpha*(v_t - s_prev) + (1-alpha)*(l_{t-1} + b_{t-1})
+        b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
+        s_t = gamma*(v_t - l_t)   + (1-gamma)*s_prev
+
+    beta = gamma = 0 is EWMA (b and s stay exactly 0.0, so l_t =
+    alpha*v_t + (1-alpha)*l_{t-1} bit for bit) and gamma = 0 is Holt
+    linear.  ``vals`` is a non-empty float64 array.  The run starts
+    from the zero seed above when ``state`` is None, else continues
+    from ``state`` = (level, trend, seasonal ring, ring cursor), where
+    ``ring[cursor]`` is s_prev for the next value.
+
+    Returns the level, trend and seasonal arrays and the new state.
+    The state holds plain Python floats and an int, never numpy
+    scalars, because the streaming state store cannot unpickle those.
+    """
+    alpha, beta, gamma, period = (
+        float(alpha), float(beta), float(gamma), int(period)
+    )
+    vs = vals.tolist()
+    if state is None:
+        lv, b, ring, cur = vs[0], 0.0, [0.0] * period, 1 % period
+        lev, trd, sea = [lv], [0.0], [0.0]
+        vs = vs[1:]
+    else:
+        lv, b, ring, cur = state
+        ring = list(ring)
+        lev, trd, sea = [], [], []
+    one_m_a, one_m_b, one_m_g = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
+    for v in vs:
+        sp = ring[cur]
+        lp = lv
+        lv = alpha * (v - sp) + one_m_a * (lv + b)
+        b = beta * (lv - lp) + one_m_b * b
+        st = gamma * (v - lv) + one_m_g * sp
+        ring[cur] = st
+        cur = (cur + 1) % period
+        lev.append(lv)
+        trd.append(b)
+        sea.append(st)
+    return np.array(lev), np.array(trd), np.array(sea), (lv, b, ring, cur)
+
+
+def _exp_smooth_stage(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    tiebreak: str | None,
+    params: tuple[float, float, float, int],
+    cols: tuple[str, ...],
+    horizon: int = 0,
+    step_seconds: int = 0,
+) -> DataFrame:
+    """``exp_smooth_run`` per key through ONE keyed mapInPandas
+    (``plans.keyed``), carrying each key's state across Arrow batches:
+    O(period) state per key, no group materialization, so a series of
+    any length streams through.
+
+    Appends the level, trend and seasonal arrays under the names in
+    ``cols`` (a prefix of the three).  With ``horizon`` > 0 it instead
+    emits, once the input is exhausted, ``horizon`` forecast rows per
+    key from the final state:
+
+        f_{T+h} = l_T + h*b_T + s_{T+h-period},
+        ts = last_ts + h*step_seconds
+    """
+    check_smoothing(*params)
+    period = params[3]
+    order = [ts_col] + ([tiebreak] if tiebreak else [])
+    key_fields = ", ".join(f"{k} string" for k in keys)
+    if horizon:
+        schema = f"{key_fields}, {ts_col} timestamp, h int, forecast double"
+    else:
+        extra = f", {tiebreak} long" if tiebreak else ""
+        schema = f"{key_fields}, {ts_col} timestamp{extra}, {value_col} double"
+        schema += "".join(f", {c} double" for c in cols)
+
+    def run(batches):
+        import pandas as pd
+
+        state: dict[tuple, tuple] = {}
+        last_ts: dict[tuple, np.datetime64] = {}
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
+            vals = pdf[value_col].astype("float64").to_numpy()
+            tss = pdf[ts_col].to_numpy()
+            out = [np.empty(len(pdf), dtype=np.float64) for _ in cols]
+            for s, e in zip(*key_runs(key_arrs)):
+                key = tuple(arr[s] for arr in key_arrs)
+                lev, trd, sea, state[key] = exp_smooth_run(
+                    vals[s:e], state.get(key), *params
+                )
+                for o, x in zip(out, (lev, trd, sea)):
+                    o[s:e] = x
+                last_ts[key] = tss[e - 1]
+            if not horizon:
+                res = {k: arr for k, arr in zip(keys, key_arrs)}
+                res[ts_col] = tss
+                if tiebreak:
+                    res[tiebreak] = pdf[tiebreak].to_numpy()
+                res[value_col] = vals
+                res.update(zip(cols, out))
+                yield pd.DataFrame(res)
+        if not (horizon and state):
+            # an all-empty partition must not emit an object-dtype
+            # frame Arrow can't cast to the schema
+            return
+        hs = np.arange(1, horizon + 1)
+        steps = hs * np.timedelta64(step_seconds, "s")
+        ts_out, f_out = [], []
+        for key, (lv, b, ring, cur) in state.items():
+            # ring[cur] is s_{T+1-period}; h steps ahead reads
+            # s_{T+h-period}, i.e. (cur + h - 1) mod period — wrapping
+            # past one period reuses the latest cycle (the standard
+            # bounded-horizon convention)
+            ts_out.append(last_ts[key] + steps)
+            sp = np.asarray(ring)[(cur + hs - 1) % period]
+            f_out.append(lv + hs * b + sp)
+        res = {
+            k: np.repeat([key[i] for key in state], horizon)
+            for i, k in enumerate(keys)
+        }
+        res[ts_col] = np.concatenate(ts_out).astype("datetime64[us]")
+        res["h"] = np.tile(hs.astype(np.int32), len(state))
+        res["forecast"] = np.concatenate(f_out)
+        yield pd.DataFrame(res)
+
+    slim = df.filter(F.col(value_col).isNotNull()).select(
+        *keys, *order, value_col
+    )
+    return keyed_map_in_pandas(slim, keys, order, run, schema)
+
 
 def ewma_smooth(
     df: DataFrame,
@@ -197,65 +366,16 @@ def ewma_smooth(
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Per-key EWMA: s_1 = v_1; s_t = alpha*v_t + (1-alpha)*s_{t-1}
-    (pandas ewm(adjust=False) semantics), appended as column ``ewma``.
+    (pandas' ``ewm`` with ``adjust=False``), appended as column
+    ``ewma``.
 
-    Runs as repartition(keys) + sortWithinPartitions + ONE mapInPandas
-    carrying only {key: last_s} across Arrow batches — the recursion
-    has O(1) state, so no group is ever materialized and a conversation
-    of any length streams through.  The carried state is injected by
-    prepending it as a synthetic first sample and dropping the first
-    output (ewm(adjust=False) then continues the recursion exactly).
+    ``exp_smooth_run`` with beta = gamma = 0, streamed per key by
+    ``_exp_smooth_stage``.
     """
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    order = [ts_col] + ([tiebreak] if tiebreak else [])
-    key_fields = ", ".join(f"{k} string" for k in keys)
-    extra = f", {tiebreak} long" if tiebreak else ""
-    schema = (
-        f"{key_fields}, {ts_col} timestamp{extra}, {value_col} double, "
-        "ewma double"
+    return _exp_smooth_stage(
+        df, keys, ts_col, value_col, tiebreak, (alpha, 0.0, 0.0, 1),
+        ("ewma",),
     )
-
-    def smooth(batches):
-        import pandas as pd
-
-        state: dict[tuple, float] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
-            vals = pdf[value_col].astype("float64").to_numpy()
-            starts, ends = key_runs(key_arrs)
-            out = np.empty(len(pdf), dtype=np.float64)
-            for s, e in zip(starts, ends):
-                key = tuple(arr[s] for arr in key_arrs)
-                run = vals[s:e]
-                prev = state.get(key)
-                if prev is None:
-                    sm = (
-                        pd.Series(run).ewm(alpha=alpha, adjust=False)
-                        .mean().to_numpy()
-                    )
-                else:
-                    sm = (
-                        pd.Series(np.concatenate(([prev], run)))
-                        .ewm(alpha=alpha, adjust=False)
-                        .mean().to_numpy()[1:]
-                    )
-                out[s:e] = sm
-                state[key] = sm[-1]
-            res = {k: arr for k, arr in zip(keys, key_arrs)}
-            res[ts_col] = pdf[ts_col].to_numpy()
-            if tiebreak:
-                res[tiebreak] = pdf[tiebreak].to_numpy()
-            res[value_col] = vals
-            res["ewma"] = out
-            yield pd.DataFrame(res)
-
-    slim = df.filter(F.col(value_col).isNotNull()).select(
-        *keys, *order, value_col
-    )
-    return keyed_map_in_pandas(slim, keys, order, smooth, schema)
 
 
 # ------------------------------------------------------------- counters
@@ -513,73 +633,13 @@ def holt_smooth(
         l_t = alpha*v_t + (1-alpha)*(l_{t-1} + b_{t-1})
         b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
 
-    appended as columns ``level`` and ``trend``.
-
-    Same execution shape as ``ewma_smooth``: repartition(keys) +
-    sortWithinPartitions + ONE mapInPandas carrying {key: (l, b)}
-    across Arrow batches — O(1) state, no group materialization, so a
-    conversation of any length streams through.  The recursion is a
-    2-term linear recurrence evaluated as a scalar loop per run
-    (C-level float ops via Python floats); at ~10^6 rows/core/sec it
-    is never the bottleneck next to the shuffle that feeds it.
+    appended as columns ``level`` and ``trend``: ``exp_smooth_run``
+    with gamma = 0, streamed per key by ``_exp_smooth_stage``.
     """
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    order = [ts_col] + ([tiebreak] if tiebreak else [])
-    key_fields = ", ".join(f"{k} string" for k in keys)
-    extra = f", {tiebreak} long" if tiebreak else ""
-    schema = (
-        f"{key_fields}, {ts_col} timestamp{extra}, {value_col} double, "
-        "level double, trend double"
+    return _exp_smooth_stage(
+        df, keys, ts_col, value_col, tiebreak, (alpha, beta, 0.0, 1),
+        ("level", "trend"),
     )
-    one_m_a, one_m_b = 1.0 - alpha, 1.0 - beta
-
-    def smooth(batches):
-        import pandas as pd
-
-        state: dict[tuple, tuple] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
-            vals = pdf[value_col].astype("float64").to_numpy()
-            starts, ends = key_runs(key_arrs)
-            lev = np.empty(len(pdf), dtype=np.float64)
-            trd = np.empty(len(pdf), dtype=np.float64)
-            for s, e in zip(starts, ends):
-                key = tuple(arr[s] for arr in key_arrs)
-                prev = state.get(key)
-                run = vals[s:e].tolist()
-                if prev is None:
-                    lv, b = run[0], 0.0
-                    lev[s], trd[s] = lv, b
-                    i0 = 1
-                else:
-                    lv, b = prev
-                    i0 = 0
-                j = s + i0
-                for v in run[i0:]:
-                    lp = lv
-                    lv = alpha * v + one_m_a * (lv + b)
-                    b = beta * (lv - lp) + one_m_b * b
-                    lev[j], trd[j] = lv, b
-                    j += 1
-                state[key] = (lv, b)
-            res = {k: arr for k, arr in zip(keys, key_arrs)}
-            res[ts_col] = pdf[ts_col].to_numpy()
-            if tiebreak:
-                res[tiebreak] = pdf[tiebreak].to_numpy()
-            res[value_col] = vals
-            res["level"] = lev
-            res["trend"] = trd
-            yield pd.DataFrame(res)
-
-    slim = df.filter(F.col(value_col).isNotNull()).select(
-        *keys, *order, value_col
-    )
-    return keyed_map_in_pandas(slim, keys, order, smooth, schema)
 
 
 def holt_winters_smooth(
@@ -595,102 +655,21 @@ def holt_winters_smooth(
 ) -> DataFrame:
     """Holt-Winters additive (triple exponential) smoothing per key:
     level + trend + a ``period``-long seasonal cycle, the step up from
-    ``holt_smooth`` when the series has a known periodicity.
+    ``holt_smooth`` when the series has a known periodicity.  The
+    recursion is ``exp_smooth_run``'s, appended as columns ``level``,
+    ``trend``, ``seasonal``.
 
-        s_prev = s_{t-period}  (0.0 while t <= period: pre-season zeros)
-        l_1 = v_1, b_1 = 0
-        l_t = alpha*(v_t - s_prev) + (1-alpha)*(l_{t-1} + b_{t-1})
-        b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
-        s_t = gamma*(v_t - l_t)   + (1-gamma)*s_prev
-
-    appended as columns ``level``, ``trend``, ``seasonal``.  The
-    zero-seed initialization (rather than a first-cycle average) keeps
-    the recursion strictly one-pass — every output depends only on the
-    carried state, never on a lookahead over the first cycle — which
-    is what lets the operator stream arbitrarily long series through
-    O(period) state, and makes any bounded prefix a closed-form
-    expression the DuckDB oracle can unroll literally.
-
-    Same execution shape as ``holt_smooth``: repartition(keys) +
-    sortWithinPartitions + ONE mapInPandas carrying
-    {key: (l, b, seasonal ring buffer)} across Arrow batches — the
-    ring is ``period`` floats per key, so state stays O(period), not
-    O(series).
+    The zero-seed initialization (rather than a first-cycle average)
+    keeps the recursion strictly one-pass — every output depends only
+    on the carried state, never on a lookahead over the first cycle —
+    which is what lets the operator stream arbitrarily long series
+    through O(period) state, and makes any bounded prefix a
+    closed-form expression the DuckDB oracle can unroll literally.
     """
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    if not 0.0 <= gamma <= 1.0:
-        raise ValueError("gamma must be in [0, 1]")
-    if period < 1:
-        raise ValueError("period must be >= 1")
-    order = [ts_col] + ([tiebreak] if tiebreak else [])
-    key_fields = ", ".join(f"{k} string" for k in keys)
-    extra = f", {tiebreak} long" if tiebreak else ""
-    schema = (
-        f"{key_fields}, {ts_col} timestamp{extra}, {value_col} double, "
-        "level double, trend double, seasonal double"
+    return _exp_smooth_stage(
+        df, keys, ts_col, value_col, tiebreak, (alpha, beta, gamma, period),
+        ("level", "trend", "seasonal"),
     )
-    one_m_a, one_m_b, one_m_g = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
-
-    def smooth(batches):
-        import pandas as pd
-
-        # key -> (level, trend, ring list of last `period` seasonals,
-        #         ring cursor)
-        state: dict[tuple, tuple] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
-            vals = pdf[value_col].astype("float64").to_numpy()
-            starts, ends = key_runs(key_arrs)
-            lev = np.empty(len(pdf), dtype=np.float64)
-            trd = np.empty(len(pdf), dtype=np.float64)
-            sea = np.empty(len(pdf), dtype=np.float64)
-            for s0, e0 in zip(starts, ends):
-                key = tuple(arr[s0] for arr in key_arrs)
-                prev = state.get(key)
-                run = vals[s0:e0].tolist()
-                if prev is None:
-                    lv, b = run[0], 0.0
-                    ring = [0.0] * period
-                    cur = 0
-                    # s_1 = gamma*(v_1 - l_1) + (1-gamma)*0 = 0
-                    ring[cur] = 0.0
-                    cur = (cur + 1) % period
-                    lev[s0], trd[s0], sea[s0] = lv, b, 0.0
-                    i0 = 1
-                else:
-                    lv, b, ring, cur = prev
-                    i0 = 0
-                j = s0 + i0
-                for v in run[i0:]:
-                    sp = ring[cur]  # s_{t-period} (0.0 pre-season)
-                    lp = lv
-                    lv = alpha * (v - sp) + one_m_a * (lv + b)
-                    b = beta * (lv - lp) + one_m_b * b
-                    st = gamma * (v - lv) + one_m_g * sp
-                    ring[cur] = st
-                    cur = (cur + 1) % period
-                    lev[j], trd[j], sea[j] = lv, b, st
-                    j += 1
-                state[key] = (lv, b, ring, cur)
-            res = {k: arr for k, arr in zip(keys, key_arrs)}
-            res[ts_col] = pdf[ts_col].to_numpy()
-            if tiebreak:
-                res[tiebreak] = pdf[tiebreak].to_numpy()
-            res[value_col] = vals
-            res["level"] = lev
-            res["trend"] = trd
-            res["seasonal"] = sea
-            yield pd.DataFrame(res)
-
-    slim = df.filter(F.col(value_col).isNotNull()).select(
-        *keys, *order, value_col
-    )
-    return keyed_map_in_pandas(slim, keys, order, smooth, schema)
 
 
 def holt_winters_forecast(
@@ -717,96 +696,19 @@ def holt_winters_forecast(
     bucket width) rather than the operator guessing it from
     irregular gaps.
 
-    Execution: the SAME one-pass recursion as ``holt_winters_smooth``
-    (repartition + sortWithinPartitions + one mapInPandas), but only
-    the terminal state per key is kept; forecast rows are emitted
-    AFTER the input is exhausted, from the carried
-    ``{key: (l, b, ring, cursor, last_ts)}`` dict — so the operator
-    streams arbitrarily long histories through O(period) state and
-    its output is |keys| * horizon rows, never |input|.
+    Execution: the SAME one-pass recursion as ``holt_winters_smooth``,
+    but only the terminal state per key is kept and the forecast rows
+    are emitted after the input is exhausted — O(period) state, and
+    |keys| * horizon output rows, never |input|.
     """
     if horizon < 1:
         raise ValueError("horizon must be >= 1")
     if step_seconds < 1:
         raise ValueError("step_seconds must be >= 1")
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    if not 0.0 <= gamma <= 1.0:
-        raise ValueError("gamma must be in [0, 1]")
-    if period < 1:
-        raise ValueError("period must be >= 1")
-    order = [ts_col] + ([tiebreak] if tiebreak else [])
-    key_fields = ", ".join(f"{k} string" for k in keys)
-    schema = f"{key_fields}, {ts_col} timestamp, h int, forecast double"
-    one_m_a, one_m_b, one_m_g = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
-
-    def run(batches):
-        import pandas as pd
-
-        state: dict[tuple, tuple] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            key_arrs = [pdf[k].astype(str).to_numpy() for k in keys]
-            vals = pdf[value_col].astype("float64").to_numpy()
-            tss = pdf[ts_col].to_numpy()
-            starts, ends = key_runs(key_arrs)
-            for s0, e0 in zip(starts, ends):
-                key = tuple(arr[s0] for arr in key_arrs)
-                prev = state.get(key)
-                run_v = vals[s0:e0].tolist()
-                if prev is None:
-                    lv, b = run_v[0], 0.0
-                    ring, cur = [0.0] * period, 0
-                    ring[cur] = 0.0
-                    cur = (cur + 1) % period
-                    i0 = 1
-                else:
-                    lv, b, ring, cur, _ = prev
-                    i0 = 0
-                for v in run_v[i0:]:
-                    sp = ring[cur]
-                    lp = lv
-                    lv = alpha * (v - sp) + one_m_a * (lv + b)
-                    b = beta * (lv - lp) + one_m_b * b
-                    ring[cur] = gamma * (v - lv) + one_m_g * sp
-                    cur = (cur + 1) % period
-                state[key] = (lv, b, ring, cur, tss[e0 - 1])
-        if not state:
-            return  # an all-empty partition must not emit an
-            # object-dtype frame Arrow can't cast to the schema
-        n_keys_out = len(state) * horizon
-        key_cols = [[] for _ in keys]
-        ts_out = np.empty(n_keys_out, dtype="datetime64[us]")
-        h_out = np.empty(n_keys_out, dtype=np.int32)
-        f_out = np.empty(n_keys_out, dtype=np.float64)
-        step = np.timedelta64(step_seconds, "s")
-        i = 0
-        for key, (lv, b, ring, cur, last_ts) in state.items():
-            for h in range(1, horizon + 1):
-                # ring[cur] is s_{T+1-period}; h steps ahead reads
-                # s_{T+h-period}, i.e. (cur + h - 1) mod period —
-                # wrapping past one period reuses the latest cycle
-                # (the standard bounded-horizon convention)
-                sp = ring[(cur + h - 1) % period]
-                for kc, kv in zip(key_cols, key):
-                    kc.append(kv)
-                ts_out[i] = last_ts + h * step
-                h_out[i] = h
-                f_out[i] = lv + h * b + sp
-                i += 1
-        res = {k: kc for k, kc in zip(keys, key_cols)}
-        res[ts_col] = ts_out
-        res["h"] = h_out
-        res["forecast"] = f_out
-        yield pd.DataFrame(res)
-
-    slim = df.filter(F.col(value_col).isNotNull()).select(
-        *keys, *order, value_col
+    return _exp_smooth_stage(
+        df, keys, ts_col, value_col, tiebreak, (alpha, beta, gamma, period),
+        (), horizon, step_seconds,
     )
-    return keyed_map_in_pandas(slim, keys, order, run, schema)
 
 
 def asap_pick_window(

@@ -12,6 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from peakmatch_xcorr_spark.operators.downsample import (
+    check_smoothing,
+    exp_smooth_run,
+)
+
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
@@ -163,62 +168,63 @@ def stateful_conv_totals(stream: DataFrame) -> DataFrame:
     )
 
 
+def _stateful_smooth(
+    stream: DataFrame,
+    value_col: str,
+    cols: tuple[str, ...],
+    params: tuple[float, float, float, int],
+) -> DataFrame:
+    """``exp_smooth_run`` once per micro-batch and conversation, from
+    the (level, trend, ring, cursor) state the previous micro-batch
+    left in the state store: the same carry the batch stage threads
+    across Arrow batches, here persisted by the streaming checkpoint.
+    Emits one row per input row with the level, trend and seasonal
+    arrays under the names in ``cols`` (update mode)."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    check_smoothing(*params)
+    out_schema = f"conv_id string, ts timestamp, {value_col} double"
+    out_schema += "".join(f", {c} double" for c in cols)
+    state_schema = "level double, trend double, ring array<double>, cur int"
+
+    def update(key, pdfs, state: GroupState):
+        import pandas as pd
+
+        carry = state.get if state.exists else None
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            pdf = pdf.sort_values("ts", kind="mergesort")
+            vals = pdf[value_col].astype("float64").to_numpy()
+            lev, trd, sea, carry = exp_smooth_run(vals, carry, *params)
+            out = {"conv_id": key[0], "ts": pdf["ts"].to_numpy()}
+            out[value_col] = vals
+            out.update(zip(cols, (lev, trd, sea)))
+            yield pd.DataFrame(out)
+        if carry is not None:
+            state.update(carry)
+
+    return stream.groupBy("conv_id").applyInPandasWithState(
+        update, out_schema, state_schema, "update",
+        GroupStateTimeout.NoTimeout,
+    )
+
+
 def stateful_ewma(
     stream: DataFrame,
     value_col: str = "turn_idx",
     alpha: float = 0.2,
 ) -> DataFrame:
     """Streaming mirror of operators/downsample.ewma_smooth: the EWMA
-    recursion s_t = a*v_t + (1-a)*s_{t-1} carries O(1) state, so each
-    micro-batch continues it from {conv_id: last_s} in the state store
-    — exactly the same carry the batch kernel threads across Arrow
-    batches, here persisted by the streaming checkpoint instead.
+    recursion s_t = a*v_t + (1-a)*s_{t-1}, continued across
+    micro-batches from the state store, appended as column ``ewma``.
 
-    Emits one smoothed row per input row (update mode).  In-order
-    arrival per key is assumed (rows inside a batch are sorted by ts;
-    a row older than the carried state's timestamp would need
-    watermark-bounded buffering, which the activity rollup path —
+    In-order arrival per key is assumed (rows inside a batch are
+    sorted by ts; a row older than the carried state's timestamp would
+    need watermark-bounded buffering, which the activity rollup path —
     finalized buckets — is the right place for, not the raw-turn
     recursion)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        f"conv_id string, ts timestamp, {value_col} double, ewma double"
-    )
-    state_schema = "last_s double"
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        prev = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("ts", kind="mergesort")
-            vals = pdf[value_col].astype("float64")
-            if prev is None:
-                sm = vals.ewm(alpha=alpha, adjust=False).mean()
-            else:
-                sm = (
-                    pd.concat([pd.Series([prev]), vals], ignore_index=True)
-                    .ewm(alpha=alpha, adjust=False)
-                    .mean()
-                    .iloc[1:]
-                )
-            prev = float(sm.iloc[-1])
-            yield pd.DataFrame({
-                "conv_id": key[0],
-                "ts": pdf["ts"].to_numpy(),
-                value_col: vals.to_numpy(),
-                "ewma": sm.to_numpy(),
-            })
-        if prev is not None:
-            state.update((prev,))
-
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _stateful_smooth(stream, value_col, ("ewma",), (alpha, 0.0, 0.0, 1))
 
 
 def stateful_holt_winters(
@@ -230,80 +236,13 @@ def stateful_holt_winters(
     period: int = 24,
 ) -> DataFrame:
     """Streaming mirror of operators/downsample.holt_winters_smooth:
-    the additive level+trend+seasonal recursion carries O(period)
-    state — (level, trend, seasonal ring, cursor) per conversation —
-    so each micro-batch continues it from the state store exactly
-    where the previous one stopped, the same carry the batch kernel
-    threads across Arrow batches.
-
-    Emits one (level, trend, seasonal) row per input row (update
-    mode).  Same in-order-arrival assumption as ``stateful_ewma``:
-    rows inside a batch are sorted by ts; out-of-order rows belong on
-    the finalized-bucket rollup path, not the raw recursion."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if period < 1:
-        raise ValueError("period must be >= 1")
-    out_schema = (
-        f"conv_id string, ts timestamp, {value_col} double, "
-        "level double, trend double, seasonal double"
-    )
-    state_schema = "level double, trend double, ring array<double>, cur int"
-    one_m_a, one_m_b, one_m_g = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        if state.exists:
-            lv, b, ring, cur = state.get
-            ring = list(ring)
-            started = True
-        else:
-            lv, b, ring, cur = None, 0.0, [0.0] * period, 0
-            started = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("ts", kind="mergesort")
-            vals = pdf[value_col].astype("float64").to_numpy()
-            lev = np.empty(len(vals))
-            trd = np.empty(len(vals))
-            sea = np.empty(len(vals))
-            i0 = 0
-            if not started:
-                lv = vals[0]
-                ring[cur] = 0.0
-                cur = (cur + 1) % period
-                lev[0], trd[0], sea[0] = lv, b, 0.0
-                i0, started = 1, True
-            for i in range(i0, len(vals)):
-                sp = ring[cur]
-                lp = lv
-                lv = alpha * (vals[i] - sp) + one_m_a * (lv + b)
-                b = beta * (lv - lp) + one_m_b * b
-                st = gamma * (vals[i] - lv) + one_m_g * sp
-                ring[cur] = st
-                cur = (cur + 1) % period
-                lev[i], trd[i], sea[i] = lv, b, st
-            yield pd.DataFrame({
-                "conv_id": key[0],
-                "ts": pdf["ts"].to_numpy(),
-                value_col: vals,
-                "level": lev,
-                "trend": trd,
-                "seasonal": sea,
-            })
-        if started:
-            # plain-python scalars only: numpy float64s in the state
-            # tuple fail JVM-side unpickling (razorvine ClassDict)
-            state.update(
-                (float(lv), float(b), [float(x) for x in ring], int(cur))
-            )
-
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout,
+    the additive level+trend+seasonal recursion, continued across
+    micro-batches from the state store, appended as columns ``level``,
+    ``trend`` and ``seasonal``.  Same in-order-arrival assumption as
+    ``stateful_ewma``."""
+    return _stateful_smooth(
+        stream, value_col, ("level", "trend", "seasonal"),
+        (alpha, beta, gamma, period),
     )
 
 

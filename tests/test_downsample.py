@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from peakmatch_xcorr_spark.operators.downsample import (
     counter_increase,
     ewma_smooth,
+    exp_smooth_run,
     lttb_downsample,
     lttb_indices,
     m4_downsample,
@@ -195,6 +196,68 @@ def test_ewma_alpha_one_is_identity(spark, rng):
     np.testing.assert_array_equal(
         got["ewma"].to_numpy(), got["value"].to_numpy()
     )
+
+
+# ------------------------------------------------- exp_smooth_run kernel
+
+@pytest.mark.parametrize("alpha", [0.2, 0.3])
+@pytest.mark.parametrize("kind", ["uniform", "counts"])
+def test_exp_smooth_run_ewma_equals_pandas_ewm(alpha, kind):
+    """beta = gamma = 0 is pandas ewm(adjust=False) bit for bit, on
+    uniform floats and on small integer counts (runs of equal values)."""
+    rng = np.random.default_rng(7)
+    if kind == "uniform":
+        vals = rng.random(100_000)
+    else:
+        vals = rng.integers(0, 3, 100_000).astype(np.float64)
+    lev, trd, sea, _ = exp_smooth_run(vals, None, alpha)
+    want = pd.Series(vals).ewm(alpha=alpha, adjust=False).mean().to_numpy()
+    np.testing.assert_array_equal(lev, want)
+    assert not trd.any() and not sea.any()
+
+
+@pytest.mark.parametrize("params", [
+    (0.3, 0.0, 0.0, 1),
+    (0.2, 0.3, 0.0, 1),
+    (0.25, 0.2, 0.5, 5),
+], ids=["ewma", "holt", "holt_winters"])
+def test_exp_smooth_run_split_continues_exactly(params):
+    """Splitting a series at any index and continuing from the
+    returned state equals one pass, the ring and cursor included; so
+    does feeding it one value at a time."""
+    vals = np.random.default_rng(3).normal(size=37).round(2)
+    *whole, end = exp_smooth_run(vals, None, *params)
+    for i in range(1, len(vals)):
+        *head, mid = exp_smooth_run(vals[:i], None, *params)
+        *tail, got = exp_smooth_run(vals[i:], mid, *params)
+        for w, h, t in zip(whole, head, tail):
+            np.testing.assert_array_equal(np.concatenate([h, t]), w)
+        assert got == end
+    state, levels = None, []
+    for v in vals:
+        lev, _, _, state = exp_smooth_run(np.array([v]), state, *params)
+        levels.append(lev[0])
+    np.testing.assert_array_equal(np.array(levels), whole[0])
+    assert state == end
+
+
+def test_exp_smooth_run_state_is_plain_python():
+    """The state store unpickles plain floats/ints only: the state
+    holds float, list[float] and int even for numpy-typed inputs."""
+    vals = np.arange(10, dtype=np.float64)
+    state = None
+    for _ in range(2):
+        *_, state = exp_smooth_run(
+            vals, state, np.float64(0.2), np.float64(0.3),
+            np.float64(0.4), np.int64(4),
+        )
+        lv, b, ring, cur = state
+        assert type(lv) is float and type(b) is float
+        assert type(ring) is list and len(ring) == 4
+        assert all(type(x) is float for x in ring)
+        assert type(cur) is int
+    *_, state = exp_smooth_run(vals[:1], None, 0.2)
+    assert type(state[0]) is float
 
 
 # ------------------------------------------------------------- counters

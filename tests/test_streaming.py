@@ -230,6 +230,23 @@ def test_streaming_interval_join_matches_batch(spark, stream_dir):
     assert got == want
 
 
+@pytest.mark.parametrize("op, kwargs", [
+    ("stateful_ewma", {"alpha": 0.0}),
+    ("stateful_ewma", {"alpha": 1.5}),
+    ("stateful_holt_winters", {"alpha": 0.0}),
+    ("stateful_holt_winters", {"beta": 1.5}),
+    ("stateful_holt_winters", {"gamma": -0.1}),
+])
+def test_stateful_smoothers_check_params_at_call_time(op, kwargs):
+    """An out-of-range smoothing parameter raises when the operator is
+    called, before any stream exists, not inside a Python worker at the
+    first micro-batch."""
+    from peakmatch_xcorr_spark.streaming import activity
+
+    with pytest.raises(ValueError, match="must be in"):
+        getattr(activity, op)(None, "turn_idx", **kwargs)
+
+
 def test_stateful_holt_winters_matches_batch_recursion(spark, stream_dir):
     """The streaming Holt-Winters must continue the (level, trend,
     seasonal-ring) recursion exactly across micro-batch boundaries:
